@@ -245,16 +245,13 @@ class Model:
     # z-order (2-D box). Unlike bucketing/z-order this COMPOSES with date
     # partitioning and appends: every file carries its own filter, so
     # incremental writes keep the layout valid (the Catalog records the
-    # declaration in a sidecar, so maintenance rewrites — upsert,
+    # declaration in the table's log, so maintenance rewrites — upsert,
     # compaction, streaming micro-batch appends — inherit it instead of
     # silently stripping the bitsets). Exclusive with bucket_by/zorder_by
     # (those writers do not thread parquet options; declaring both
     # raises). Costs write-side space (~bits per distinct value per
     # file) — declare only for keys that are actually point-probed.
     bloom_filter_on: Sequence[str] = field(default_factory=tuple)
-    # expected distinct values PER FILE for sizing the bitset; parquet-mr
-    # over-sizes gracefully, undersizing inflates the false-positive rate
-    bloom_ndv: int = 100_000
     # Incremental-view-maintenance refresh (IvmSpec): the Runner maintains
     # this mart from its versioned source's change feed instead of
     # rebuilding it. Replaces the builder (the derivation lives in the

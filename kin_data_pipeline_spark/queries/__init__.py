@@ -95,9 +95,15 @@ CURRENT_WINDOW_HEAD = [
 
 # Queries registered after the current window filled go here at registration
 # time (test-enforced, round-agnostic rule in tests/test_registry_window.py)
-# and must lead the next round's window. Empty: round 12 adds no queries
-# (optimization round) and the 6 re-planned ones all fit in the window.
-NEXT_WINDOW_BACKLOG: list[str] = []
+# and must lead the next round's window. The four below were re-planned by
+# round 12's dedup repartition pins (PLAN_MANIFEST since=12) and have no
+# green round-12 CORRECTNESS row, so they must be verified again next round.
+NEXT_WINDOW_BACKLOG: list[str] = [
+    "curated_corpus_stats",
+    "dedup_keep_best_survivors",
+    "dedup_survivor_stats",
+    "ngram_jaccard_prefix_filtered",
+]
 
 def _ordered() -> dict[str, QuerySpec]:
     out = {n: QUERIES[n] for n in CURRENT_WINDOW_HEAD if n in QUERIES}

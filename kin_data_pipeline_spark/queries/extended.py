@@ -2813,7 +2813,7 @@ def runner_ivm_status_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The PRODUCTIONIZED streaming form of the Runner strategy —
 # Runner.stream_ivm: the CDF stream is a commit SIGNAL; each micro-batch
 # triggers one incremental refresh through the batch path (reading the
-# stored change span from the state sidecar to the log tip), so replays
+# stored change span from the recorded state to the log tip), so replays
 # are idempotent by construction. This registration covers the classes
 # the batch runner query doesn't: hybrid MIN/MAX extrema riding the
 # mart's own columns and a derived AVG recomputed per refresh. The query

@@ -61,7 +61,12 @@ def main() -> None:
     )
     old_oracle = old["oracle_hashes"] or {}
 
-    spark = get_spark(app_name="plan-fingerprints", master="local[8]")
+    # the session tests/test_plan_manifest.py checks against (the tests'
+    # conftest): plans that pin a stage's parallelism to the session's
+    # cores (operators/dedup.py) embed that number in their fingerprint
+    spark = get_spark(
+        app_name="plan-fingerprints", master="local[4]", shuffle_partitions=4
+    )
     spark.sparkContext.setLogLevel("ERROR")
 
     hashes: dict[str, str] = {}

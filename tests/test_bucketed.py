@@ -1,6 +1,7 @@
 """Bucketed-table layout: co-located sort-merge joins must compile with NO
 shuffle exchange on either side — the 100 TB fact-join layout decision —
-and the layout must survive a fresh session via sidecar re-registration."""
+and the layout must survive a fresh session via re-registration from the
+table's log."""
 
 from __future__ import annotations
 
@@ -70,7 +71,7 @@ def test_bucketed_rows_match_plain_join(spark, sf_dir, bucketed_pair):
 
 def test_bucket_layout_survives_catalog_reregistration(spark, bucketed_pair):
     # simulate a fresh session: drop the session-catalog idents (external
-    # tables — data stays on disk), then read through the sidecar path
+    # tables — data stays on disk), then read through the log's bucket record
     spark.sql("DROP TABLE IF EXISTS bucketed_orders_b")
     spark.sql("DROP TABLE IF EXISTS bucketed_lineitem_b")
     with _no_broadcast(spark):
@@ -135,16 +136,15 @@ def test_bucketed_model_in_dag_joins_without_shuffle(spark, sf_dir, tmp_path):
 
 
 def test_full_write_clears_stale_bucket_layout(spark, sf_dir, tmp_path):
-    """write_full over a bucketed table must drop the bucket sidecar/ident:
-    routing the next read through the old bucketed scan would fail on the
-    plain-named files (or silently mis-join)."""
-    import os
-
+    """write_full over a bucketed table must drop the recorded bucket
+    layout: routing the next read through the old bucketed scan would
+    fail on the plain-named files (or silently mis-join)."""
     cat = Catalog(spark, str(tmp_path / "wh"))
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     cat.write_bucketed("t", orders, ["o_orderkey"], 4)
     cat.write_full("t", orders.limit(10), date_col=None)
-    assert not os.path.exists(cat._bucket_sidecar("t"))
+    with pytest.raises(ValueError, match="not a bucketed table"):
+        cat.bucketed_table("t")
     assert cat.table("t").count() == 10  # plain read, no bucket routing
 
 def test_compact_refuses_bucketed_tables(spark, sf_dir, tmp_path):

@@ -1,7 +1,7 @@
 """Catalog storage-layout pins: the date-partitioned layout must actually
 prune partitions on date-filtered reads (the property the 100 TB design
 leans on), and appends may evolve the schema (new columns null-fill old
-partitions via the sidecar schema)."""
+partitions via the schema recorded in the log)."""
 
 from __future__ import annotations
 
@@ -9,6 +9,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
+from kin_data_pipeline_spark.plans import txlog
 from kin_data_pipeline_spark.plans.engine import Catalog
 
 def _mk(spark, days, extra=False):
@@ -38,7 +39,7 @@ def test_append_evolves_schema_with_null_fill(spark, tmp_path):
     cat.write_full("t", _mk(spark, 2), date_col="date_key")
     cat.write_append("t", _mk(spark, 2, extra=True).filter(F.col("date_key") > F.lit("2024-01-01")), date_col="date_key")
     out = cat.table("t")
-    assert "tag" in out.columns  # sidecar carries the evolved schema
+    assert "tag" in out.columns  # the log carries the evolved schema
     old = out.filter(F.col("date_key") == F.lit("2024-01-01"))
     assert old.filter(F.col("tag").isNull()).count() == old.count()
     new = out.filter((F.col("date_key") == F.lit("2024-01-02")) & F.col("tag").isNotNull())
@@ -51,8 +52,8 @@ def test_bloom_filter_declaration_writes_bitsets_and_survives_append(spark, tmp_
     the declaration must hold across the incremental-append path (each
     file carries its own filter, so append composes — unlike bucketing or
     z-order which require full rewrites)."""
-    import glob
     import os
+    from urllib.parse import urlparse
 
     from pyspark.sql import functions as F
 
@@ -66,10 +67,10 @@ def test_bloom_filter_declaration_writes_bitsets_and_survives_append(spark, tmp_
     plain = Catalog(spark, str(tmp_path / "plain"))
     bloomed = Catalog(spark, str(tmp_path / "bloomed"))
     plain.write_full("t", df, date_col=None)
-    bloomed.write_full("t", df, date_col=None, bloom_cols=("wallet",), bloom_ndv=100_000)
+    bloomed.write_full("t", df, date_col=None, bloom_cols=("wallet",))
 
     size = lambda cat: sum(
-        os.path.getsize(f) for f in glob.glob(cat.path("t") + "/*.parquet")
+        os.path.getsize(urlparse(f).path) for f in cat.table("t").inputFiles()
     )
     assert size(bloomed) > size(plain) * 1.2, (size(bloomed), size(plain))
     assert (
@@ -77,7 +78,7 @@ def test_bloom_filter_declaration_writes_bitsets_and_survives_append(spark, tmp_
         == plain.table("t").orderBy("id").collect()
     )
 
-    # append path: the declaration is INHERITED from the table's sidecar
+    # append path: the declaration is INHERITED from the table's log
     # (no bloom args here — streaming micro-batch ingestion appends through
     # exactly this path), and the appended files must actually carry
     # bitsets: the bloomed catalog's append delta materially exceeds the
@@ -119,24 +120,21 @@ def test_bloom_filter_declaration_writes_bitsets_and_survives_append(spark, tmp_
     with _pytest.raises(ValueError, match="not in"):
         bloomed.write_full("t2", df, date_col=None, bloom_cols=("wallet_typo",))
 
-def test_corrupt_bloom_sidecar_recovers(spark, tmp_path):
-    """A truncated/corrupted bloom sidecar must not permanently block
-    writes of the table: the loader warns, removes the sidecar, and the
-    write proceeds without bitsets (the declaration can be re-issued)."""
-    import warnings as _w
-
+def test_bloom_declaration_is_a_table_property(spark, tmp_path):
+    """The bloom declaration is recorded in the table's log: an inherit-
+    path write keeps it, and an explicit empty declaration clears it for
+    every later write (a declaration can always be made again)."""
     cat = Catalog(spark, str(tmp_path / "wh"))
     df = spark.range(100).select(
         F.col("id"), F.col("id").cast("string").alias("wallet")
     )
+    bloom = lambda: txlog.tip(cat.path("t"))["props"]["bloom"]
     cat.write_full("t", df, date_col=None, bloom_cols=("wallet",))
-    with open(cat._bloom_sidecar("t"), "w") as fh:
-        fh.write('{"cols": ["wall')  # truncated mid-write
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        cat.write_append("t", df, date_col=None)  # inherit path — must not raise
-    assert any("unreadable" in str(c.message) for c in caught)
-    assert not __import__("os").path.exists(cat._bloom_sidecar("t"))
+    cat.write_append("t", df, date_col=None)  # inherit path
+    assert bloom() == ["wallet"]
+    cat.write_full("t", df, date_col=None, bloom_cols=())
+    cat.write_append("t", df, date_col=None)
+    assert bloom() == []
     assert cat.table("t").count() == 200
 
 def test_inherited_bloom_cols_validated_against_frame(spark, tmp_path):
@@ -145,7 +143,6 @@ def test_inherited_bloom_cols_validated_against_frame(spark, tmp_path):
     dropped for that write (with a warning) instead of parquet silently
     writing no bitsets — and the recorded declaration survives for when
     the column returns."""
-    import json as _json
     import warnings as _w
 
     cat = Catalog(spark, str(tmp_path / "wh"))
@@ -159,5 +156,4 @@ def test_inherited_bloom_cols_validated_against_frame(spark, tmp_path):
         cat.write_full("t", renamed, date_col=None)  # inherit: 'wallet' gone
     assert any("absent from the frame" in str(c.message) for c in caught)
     # declaration is kept, not silently rewritten
-    with open(cat._bloom_sidecar("t")) as fh:
-        assert _json.load(fh)["cols"] == ["wallet"]
+    assert txlog.tip(cat.path("t"))["props"]["bloom"] == ["wallet"]

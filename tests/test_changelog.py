@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from kin_data_pipeline_spark.plans import txlog
 from kin_data_pipeline_spark.plans.engine import Catalog
 
 def _catalog(spark, tmp_path):
@@ -112,8 +113,6 @@ def test_changelog_materializes_clone_copy_on_write(spark, tmp_path):
     assert _rows(c, "src") == [(1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "d", 40)]
 
 def test_changelog_preserves_date_partition_layout(spark, tmp_path):
-    import os
-
     c = _catalog(spark, tmp_path)
     df = spark.createDataFrame(
         [(1, "2024-01-01", 10), (2, "2024-01-02", 20)],
@@ -124,7 +123,7 @@ def test_changelog_preserves_date_partition_layout(spark, tmp_path):
         [(3, "2024-01-03", 30, "I", 1)], "id long, d string, v long, op string, seq long"
     ).selectExpr("id", "CAST(d AS DATE) AS d", "v", "op", "seq")
     c.apply_changelog("t", log, ["id"], date_col="d")
-    parts = {e for e in os.listdir(c.path("t")) if e.startswith("d=")}
+    parts = set(_part_files(c, "t"))
     assert parts == {"d=2024-01-01", "d=2024-01-02", "d=2024-01-03"}
     assert sorted((r.id, r.v) for r in c.table("t").collect()) == [
         (1, 10),
@@ -210,18 +209,12 @@ def test_changelog_random_logs_match_reference_fold(spark, tmp_path):
         want = sorted((k, n, v) for k, (n, v) in state.items())
         assert _rows(c, "t") == want, f"trial {trial} diverged"
 
-def _part_files(root):
-    import os
-
+def _part_files(c, name):
+    """The table's live files, grouped by their ``d=`` partition dir."""
     out = {}
-    for entry in os.listdir(root):
-        p = root + "/" + entry
-        if entry.startswith("d=") and os.path.isdir(p):
-            out[entry] = sorted(
-                (f, os.stat(p + "/" + f).st_mtime_ns, os.stat(p + "/" + f).st_ino)
-                for f in os.listdir(p)
-                if f.endswith(".parquet")
-            )
+    for f in sorted(c.table(name).inputFiles()):
+        part = next(seg for seg in f.split("/") if seg.startswith("d="))
+        out.setdefault(part, []).append(f)
     return out
 
 def _dated(spark, rows):
@@ -246,7 +239,7 @@ def test_scoped_changelog_rewrites_only_affected_partitions(spark, tmp_path):
         ],
     )
     c.write_full("t", base, "d")
-    before = _part_files(c.path("t"))
+    before = _part_files(c, "t")
     log = _dated_log(
         spark,
         [
@@ -258,10 +251,10 @@ def test_scoped_changelog_rewrites_only_affected_partitions(spark, tmp_path):
     counts = c.apply_changelog("t", log, ["id"], date_col="d", scope_partitions=True)
     assert counts["upserts"] == 2 and counts["deletes"] == 1
     assert counts["partitions_rewritten"] == 3
-    after = _part_files(c.path("t"))
-    # the untouched partition is byte-identical on disk (same inodes)
+    after = _part_files(c, "t")
+    # the untouched partition keeps the very same files
     assert after["d=2024-01-02"] == before["d=2024-01-02"]
-    # the emptied partition directory is gone; the new one exists
+    # the emptied partition has no files left; the new one has some
     assert "d=2024-01-03" not in after and "d=2024-01-04" in after
     got = sorted((r.id, r.d.isoformat(), r.v) for r in c.table("t").collect())
     assert got == [
@@ -336,26 +329,27 @@ def test_scoped_changelog_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="NULL"):
         c.apply_changelog("t", nulld, ["id"], date_col="d", scope_partitions=True)
 
-def test_scoped_changelog_clears_stale_staging(spark, tmp_path):
-    """A crash between the staging write and the swap leaves
-    t.__staging on disk; the next scoped apply must discard it (stale
-    data) and complete cleanly."""
-    import os
-
+def test_scoped_changelog_clears_stale_staging(spark, tmp_path, crash):
+    """A crash between a scoped apply's data write and its log entry
+    leaves uncommitted files on disk; the next scoped apply completes
+    cleanly without them, they never leak into the table, and vacuum
+    removes them."""
     c = _catalog(spark, tmp_path)
     c.write_full("t", _dated(spark, [(1, "2024-01-01", 10), (2, "2024-01-02", 20)]), "d")
-    stale = c.path("t.__staging")
-    os.makedirs(stale + "/d=2024-01-09")
-    with open(stale + "/d=2024-01-09/junk.parquet", "w") as f:
-        f.write("not parquet")
+    stale = _dated_log(spark, [(9, "2024-01-09", 90, "I", 1)])
+    with crash.at(txlog, "create"):
+        c.apply_changelog("t", stale, ["id"], date_col="d", scope_partitions=True)
+    crash.recover()
     log = _dated_log(spark, [(1, "2024-01-01", 11, "U", 1)])
     counts = c.apply_changelog("t", log, ["id"], date_col="d", scope_partitions=True)
     assert counts["partitions_rewritten"] == 1
-    assert not os.path.exists(stale)
     got = sorted((r.id, r.d.isoformat(), r.v) for r in c.table("t").collect())
     assert got == [(1, "2024-01-01", 11), (2, "2024-01-02", 20)]
-    # the stale junk partition never leaked into the table
-    assert "d=2024-01-09" not in set(os.listdir(c.path("t")))
+    # the crashed apply's partition never leaked into the table
+    assert "d=2024-01-09" not in _part_files(c, "t")
+    assert crash.files_on_disk(c, "t") > crash.live_files(c, "t")
+    c.vacuum("t", min_age_s=0.0)
+    assert crash.files_on_disk(c, "t") == crash.live_files(c, "t")
 
 
 def test_changelog_rejects_null_op(spark, tmp_path):
@@ -372,43 +366,21 @@ def test_changelog_rejects_null_op(spark, tmp_path):
     assert _rows(c, "t") == [(1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "d", 40)]
 
 
-def _flaky_rename(monkeypatch, scope_prefix, fail_on):
-    """Patch the engine's os.rename to raise on the Nth rename under
-    ``scope_prefix`` — a deterministic crash injector for swap windows."""
-    import os as _os
-
-    import kin_data_pipeline_spark.plans.engine as eng
-
-    real = _os.rename
-    seen = {"n": 0}
-
-    def flaky(src, dst):
-        if str(src).startswith(scope_prefix):
-            seen["n"] += 1
-            if seen["n"] == fail_on:
-                raise RuntimeError("injected crash")
-        return real(src, dst)
-
-    monkeypatch.setattr(eng.os, "rename", flaky)
-    return seen
-
-
-def test_scoped_changelog_crash_mid_swap_rolls_forward(spark, tmp_path, monkeypatch):
-    """VERDICT r4 ask #4: kill the scoped apply BETWEEN two partition
-    swaps; the swap journal must roll the table forward to a consistent
-    state on the next catalog touch — no mixed old/new table persists."""
-    import json
-    import os
-
+def test_scoped_changelog_crash_mid_swap_rolls_forward(spark, tmp_path, crash):
+    """VERDICT r4 ask #4: a scoped apply replaces several partitions in
+    ONE log entry, so a crash at either crash point never leaves a mixed
+    old/new table: before the entry every partition reads the old state,
+    after it every partition reads the new one (the replaced files linger
+    only until vacuum)."""
     base_rows = [
         (1, "2024-01-01", 10),
         (2, "2024-01-02", 20),
         (3, "2024-01-03", 30),
     ]
     log_rows = [
-        (1, "2024-01-01", 11, "U", 1),  # move d=2024-01-01
+        (1, "2024-01-01", 11, "U", 1),  # rewrite d=2024-01-01
         (3, None, None, "D", 2),        # delete all of d=2024-01-03
-        (4, "2024-01-04", 40, "I", 3),  # move (new) d=2024-01-04
+        (4, "2024-01-04", 40, "I", 3),  # new d=2024-01-04
     ]
     # twin catalog: the expected post-apply state via the full-table path
     ct = _catalog(spark, tmp_path / "twin")
@@ -416,66 +388,60 @@ def test_scoped_changelog_crash_mid_swap_rolls_forward(spark, tmp_path, monkeypa
     ct.apply_changelog("t", _dated_log(spark, log_rows), ["id"], date_col="d")
     expected = sorted((r.id, r.d.isoformat(), r.v) for r in ct.table("t").collect())
 
+    def rows(cat):
+        return sorted((r.id, r.d.isoformat(), r.v) for r in cat.table("t").collect())
+
     c = _catalog(spark, tmp_path / "wh")
     c.write_full("t", _dated(spark, base_rows), "d")
-    # renames under the warehouse during the scoped apply:
-    #   1. journal tmp -> journal (the commit point)
-    #   2. staging d=2024-01-01 -> root (first partition move)
-    #   3. staging d=2024-01-04 -> root (second move)  <- crash here
-    seen = _flaky_rename(monkeypatch, str(tmp_path / "wh"), fail_on=3)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        c.apply_changelog(
+    old = rows(c)
+
+    def apply(cat):
+        return cat.apply_changelog(
             "t", _dated_log(spark, log_rows), ["id"], date_col="d",
             scope_partitions=True,
         )
-    assert seen["n"] == 3
-    # crash state really is mid-swap: journal committed, table mixed
-    journal = c._swap_journal("t")
-    assert os.path.exists(journal)
-    parts = set(os.listdir(c.path("t")))
-    assert "d=2024-01-03" not in parts  # delete already executed
-    assert "d=2024-01-04" not in parts  # second move never happened
-    assert len(json.load(open(journal))["entries"]) == 3
-    # recovery: any catalog touch rolls the journal forward
+
+    with crash.at(txlog, "create"):
+        apply(c)
+    crash.recover()
+    assert rows(_catalog(spark, tmp_path / "wh")) == old
+    with crash.at(Catalog, "_delete_files"):
+        apply(c)
+    crash.recover()
     c2 = _catalog(spark, tmp_path / "wh")
-    assert c2.exists("t")
-    assert not os.path.exists(journal)
-    assert not os.path.exists(c2.path("t.__staging"))
-    got = sorted((r.id, r.d.isoformat(), r.v) for r in c2.table("t").collect())
-    assert got == expected
+    assert rows(c2) == expected
+    c2.vacuum("t", min_age_s=0.0)
+    assert crash.files_on_disk(c2, "t") == crash.live_files(c2, "t")
+    assert rows(c2) == expected
 
 
-def test_changelog_full_apply_crash_mid_publish_heals(spark, tmp_path, monkeypatch):
-    """ADVICE r4: the non-scoped apply now publishes via the compact()-style
-    rename-aside, so a crash between the two renames leaves the table
-    recoverable by _heal_compaction instead of absent with data stranded
-    in __staging."""
-    import os
-
+def test_changelog_full_apply_crash_mid_publish_heals(spark, tmp_path, crash):
+    """ADVICE r4: a crash in the non-scoped apply never leaves the table
+    absent: before the log entry the pre-apply table is intact, after it
+    the applied one is complete, and a reapply converges."""
     c = _catalog(spark, tmp_path / "wh")
     c.write_full("t", _base(spark), None)
     log = _log(spark, [(2, "B", 21, "U", 1), (5, "e", 50, "I", 2)])
-    # renames under the warehouse: 1. root -> __precompact, 2. staging ->
-    # root  <- crash between them (the exact window ADVICE flagged)
-    _flaky_rename(monkeypatch, str(tmp_path / "wh"), fail_on=2)
-    with pytest.raises(RuntimeError, match="injected crash"):
+    applied = [(1, "a", 10), (2, "B", 21), (3, "c", 30), (4, "d", 40), (5, "e", 50)]
+    with crash.at(txlog, "create"):
         c.apply_changelog("t", log, ["id"])
-    assert not os.path.exists(c.path("t"))  # the crash window is real
-    assert os.path.exists(c.path("t.__precompact"))
-    # recovery: heal restores the pre-apply table; reapply converges
+    crash.recover()
     c2 = _catalog(spark, tmp_path / "wh")
-    assert c2.exists("t")
     assert _rows(c2, "t") == [(1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "d", 40)]
+    with crash.at(Catalog, "_delete_files"):
+        c2.apply_changelog("t", log, ["id"])
+    crash.recover()
+    assert _rows(c2, "t") == applied
     c2.apply_changelog("t", log, ["id"])
-    assert _rows(c2, "t") == [
-        (1, "a", 10), (2, "B", 21), (3, "c", 30), (4, "d", 40), (5, "e", 50),
-    ]
+    assert _rows(c2, "t") == applied
+    c2.vacuum("t", min_age_s=0.0)
+    assert crash.files_on_disk(c2, "t") == crash.live_files(c2, "t")
 
 
 def test_scoped_apply_refuses_dtype_drift(spark, tmp_path):
     """A widening changelog (int->long) through the SCOPED path would leave
     swapped partitions physically typed differently from untouched ones and
-    from the schema sidecar — it must raise, directing to the full rewrite."""
+    from the recorded schema — it must raise, directing to the full rewrite."""
     import datetime
 
     import pytest as _pytest

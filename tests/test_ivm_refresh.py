@@ -8,7 +8,7 @@ change feed instead of rebuilt. Pins (VERDICT r8 ask #3):
   live files and version snapshots are deleted and refresh still works
   from change files alone);
 - unchanged tip → recorded no-op; out-of-band writes invalidate the
-  state sidecar and force a rebuild; unsound row_transforms are rejected
+  recorded state and force a rebuild; unsound row_transforms are rejected
   before any write.
 """
 
@@ -16,17 +16,29 @@ from __future__ import annotations
 
 import datetime
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from kin_data_pipeline_spark.plans import txlog
 from kin_data_pipeline_spark.plans.engine import Catalog, Runner
 from kin_data_pipeline_spark.plans.guard import PlanGuardError
 from kin_data_pipeline_spark.plans.model import IvmSpec, Model, topo_sort
 
 RUN_DATE = datetime.date(2024, 1, 31)
 DDL = "k bigint, status string, amount double, note string"
+
+
+def _destroy_base(cat, name):
+    """Delete every data file of ``name`` that no commit's change feed
+    lists — every copy of the base data, at every version."""
+    root = cat.path(name)
+    entries = txlog.entries(root)
+    feed = {
+        f["path"] for e in entries for f in (e["changes"] or {}).get("files", ())
+    }
+    for path in {f["path"] for e in entries for f in e["files"]} - feed:
+        os.remove(os.path.join(root, path))
 
 
 def _rows_of(df):
@@ -138,12 +150,8 @@ def test_incremental_refresh_never_scans_the_base(spark, tmp_path):
     cat.write_append(
         "txns", spark.createDataFrame([(3, "open", 4.0, "c")], DDL), None
     )  # v1, carries its own change rows
-    # destroy every copy of the base data: live table + all snapshots
-    shutil.rmtree(cat.path("txns"))
-    for v in (0, 1):
-        data = os.path.join(cat._versions_dir("txns", v), "data")
-        if os.path.isdir(data):
-            shutil.rmtree(data)
+    # destroy every copy of the base data: all files but the change feed
+    _destroy_base(cat, "txns")
     res = runner.run([m], RUN_DATE)
     assert res[0].action == "ivm"
     rows = {r["status"]: (r["n_rows"], r["total_cents"]) for r in
@@ -166,7 +174,7 @@ def test_unchanged_tip_is_a_noop(spark, tmp_path):
 
 
 def test_out_of_band_write_invalidates_state(spark, tmp_path):
-    """A write to the mart OUTSIDE the IVM path drops the state sidecar,
+    """A write to the mart OUTSIDE the IVM path drops the recorded state,
     so the next run rebuilds from the tip instead of maintaining on top
     of unknown content."""
     cat = Catalog(spark, str(tmp_path / "wh"))
@@ -338,11 +346,7 @@ def test_distinct_support_maintains_without_the_base(spark, tmp_path):
         spark.createDataFrame([(3, "open", 3.0, "a"), (4, "paid", 4.0, "c")], DDL),
         None,
     )  # v1 carries its own change rows
-    shutil.rmtree(cat.path("txns"))
-    for v in (0, 1):
-        data = os.path.join(cat._versions_dir("txns", v), "data")
-        if os.path.isdir(data):
-            shutil.rmtree(data)
+    _destroy_base(cat, "txns")
     assert runner.run([m], RUN_DATE)[0].action == "ivm"
     rows = {r["status"]: (r["n_rows"], r["n_notes"]) for r in
             (row.asDict() for row in cat.table(m.name).collect())}
@@ -1615,7 +1619,7 @@ def test_dim_delta_scoped_refresh_all_classes(spark, tmp_path):
 
 def test_dim_delta_never_recomputes_unaffected_groups(spark, tmp_path):
     """THE scoping pin: a sentinel written RAW into an unaffected group's
-    stored mart row (bypassing the catalog, so the IVM sidecar survives)
+    stored mart row (bypassing the catalog, so the IVM state survives)
     is still there after a dim-edit refresh — the scoped path carried the
     row verbatim instead of recomputing it — while the affected key's
     groups land on the recompute. A full_refresh then repairs the
@@ -1633,7 +1637,9 @@ def test_dim_delta_never_recomputes_unaffected_groups(spark, tmp_path):
 
     # poison total_cents of key 2's 'open' row, raw on disk
     target = None
-    for fpath in _glob.glob(str(tmp_path / "wh" / "keyed_rollup" / "*.parquet")):
+    for fpath in _glob.glob(
+        str(tmp_path / "wh" / "keyed_rollup" / "**" / "*.parquet"), recursive=True
+    ):
         t = _pq.read_table(fpath)
         d = t.to_pydict()
         for i in range(t.num_rows):
@@ -1817,7 +1823,9 @@ def test_grain_omits_key_never_recomputes_unaffected_groups(spark, tmp_path):
 
     # poison total_cents of the 'silver' (key 2) row, raw on disk
     target = None
-    for fpath in _glob.glob(str(tmp_path / "wh" / "label_only" / "*.parquet")):
+    for fpath in _glob.glob(
+        str(tmp_path / "wh" / "label_only" / "**" / "*.parquet"), recursive=True
+    ):
         t = _pq.read_table(fpath)
         d = t.to_pydict()
         for i in range(t.num_rows):

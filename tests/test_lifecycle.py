@@ -8,6 +8,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from kin_data_pipeline_spark.plans import txlog
 from kin_data_pipeline_spark.plans.engine import Catalog, Runner
 from kin_data_pipeline_spark.plans.model import Model, topo_sort
 from kin_data_pipeline_spark.sources.catalog import load_table
@@ -103,13 +104,14 @@ def test_clone_is_zero_copy_alias(spark, sf_dir, tmp_path):
     cat = Catalog(spark, str(tmp_path / "wh"))
     Runner(spark, cat).run(models, datetime.date(2024, 1, 31), "full_refresh")
     assert _snapshot(cat, "daily_summary_clone") == _snapshot(cat, "daily_summary")
-    import os
-
-    assert not os.path.exists(cat.path("daily_summary_clone"))
+    # the alias reads the source's own files: nothing was copied
+    assert sorted(cat.table("daily_summary_clone").inputFiles()) == sorted(
+        cat.table("daily_summary").inputFiles()
+    )
 
 def test_upsert_into_clone_materializes_copy_on_write(spark, sf_dir, tmp_path):
-    """Upserting through a clone name must materialize the clone (marker
-    dropped, physical table written) and leave the SOURCE untouched."""
+    """Upserting through a clone name must materialize the clone (alias
+    dropped, its own files written) and leave the SOURCE untouched."""
     catalog = Catalog(spark, str(tmp_path / "wh"))
     base = spark.range(5).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
@@ -118,10 +120,10 @@ def test_upsert_into_clone_materializes_copy_on_write(spark, sf_dir, tmp_path):
     catalog.clone("dst", "src")
     patch = spark.createDataFrame([(1, 999), (7, 700)], ["k", "v"])
     catalog.upsert_by_key("dst", patch, key_cols=["k"], date_col=None)
-    # marker gone, physical table present
-    import os
-
-    assert not os.path.exists(catalog._clone_marker("dst"))
+    # alias gone: the clone now reads files of its own
+    assert not set(catalog.table("dst").inputFiles()) & set(
+        catalog.table("src").inputFiles()
+    )
     got = {r["k"]: r["v"] for r in catalog.table("dst").collect()}
     assert got[1] == 999 and got[7] == 700 and got[0] == 0
     # source unchanged (copy-on-write)
@@ -195,13 +197,11 @@ def test_compaction_collapses_files_preserving_data(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="clone"):
         cat.compact("frag_alias", "date_key")
 
-def test_compaction_crash_self_heals(spark, sf_dir, tmp_path):
-    """A crash inside compact()'s rename-aside swap leaves the canonical
-    path absent (data preserved under __precompact); the next catalog touch
-    must restore it transparently."""
-    import os
-    import shutil
-
+def test_compaction_crash_self_heals(spark, sf_dir, tmp_path, crash):
+    """compact() commits its rewrite as one log entry, so a crash at
+    either crash point loses nothing: before the entry the table reads its
+    old files (the new ones are uncommitted and invisible), after it the
+    compacted files (the replaced ones linger until vacuum)."""
     cat = Catalog(spark, str(tmp_path / "wh"))
     df = spark.createDataFrame(
         [(datetime.date(2024, 1, 1), 1), (datetime.date(2024, 1, 2), 2)],
@@ -209,37 +209,41 @@ def test_compaction_crash_self_heals(spark, sf_dir, tmp_path):
     )
     cat.write_full("t", df, "date_key")
     rows = sorted(tuple(r) for r in cat.table("t").collect())
+    before = crash.live_files(cat, "t")
 
-    # Simulate the crash window: root renamed aside, staging half-written.
-    os.rename(cat.path("t"), cat.path("t.__precompact"))
-    os.makedirs(cat.path("t.__compacting"))
-    assert cat.exists("t")  # heal restores the canonical path
-    assert sorted(tuple(r) for r in cat.table("t").collect()) == rows
-    assert not os.path.exists(cat.path("t.__precompact"))
-    # staging is deliberately NOT cleaned by heal (a concurrent reader must
-    # never delete a live compact()'s staging); the next compact overwrites
-    assert os.path.exists(cat.path("t.__compacting"))
-
-    # Crash AFTER the swap (only cleanup lost): leftover old dir is cleared.
-    shutil.copytree(cat.path("t"), cat.path("t.__precompact"))
-    assert cat.exists("t")
-    assert not os.path.exists(cat.path("t.__precompact"))
+    # crash after the compacted files are written, before the log entry
+    with crash.at(txlog, "create"):
+        cat.compact("t", "date_key")
+    crash.recover()
+    assert cat.exists("t") and crash.live_files(cat, "t") == before
     assert sorted(tuple(r) for r in cat.table("t").collect()) == rows
 
-def test_append_after_compaction_crash_restores_before_appending(spark, tmp_path):
-    """A write_append issued right after a mid-compact crash must restore
-    the preserved copy FIRST: re-creating the root with only the delta
-    would make the next heal mistake the crash for a completed swap and
-    delete the whole pre-crash table."""
-    import os
+    # crash after the log entry, before the replaced files are deleted
+    with crash.at(Catalog, "_delete_files"):
+        cat.compact("t", "date_key")
+    crash.recover()
+    assert crash.live_files(cat, "t").isdisjoint(before)
+    assert sorted(tuple(r) for r in cat.table("t").collect()) == rows
+    assert before <= crash.files_on_disk(cat, "t")
 
+    # vacuum removes both crashes' leftovers and nothing the table reads
+    cat.vacuum("t", min_age_s=0.0)
+    assert crash.files_on_disk(cat, "t") == crash.live_files(cat, "t")
+    assert sorted(tuple(r) for r in cat.table("t").collect()) == rows
+
+def test_append_after_compaction_crash_restores_before_appending(spark, tmp_path, crash):
+    """A write_append made right after a mid-compact crash appends to
+    the last committed table — the crashed compaction's files are not
+    part of it — and vacuum later removes those files."""
     cat = Catalog(spark, str(tmp_path / "wh"))
     df = spark.createDataFrame(
         [(datetime.date(2024, 1, 1), 1), (datetime.date(2024, 1, 2), 2)],
         ["date_key", "v"],
     )
     cat.write_full("t", df, "date_key")
-    os.rename(cat.path("t"), cat.path("t.__precompact"))  # crash window
+    with crash.at(txlog, "create"):
+        cat.compact("t", "date_key")
+    crash.recover()
     delta = spark.createDataFrame([(datetime.date(2024, 1, 3), 3)], ["date_key", "v"])
     cat.write_append("t", delta, "date_key")
     got = sorted(tuple(r) for r in cat.table("t").select("date_key", "v").collect())
@@ -248,7 +252,9 @@ def test_append_after_compaction_crash_restores_before_appending(spark, tmp_path
         (datetime.date(2024, 1, 2), 2),
         (datetime.date(2024, 1, 3), 3),
     ]
-    assert not os.path.exists(cat.path("t.__precompact"))
+    assert crash.files_on_disk(cat, "t") > crash.live_files(cat, "t")
+    cat.vacuum("t", min_age_s=0.0)
+    assert crash.files_on_disk(cat, "t") == crash.live_files(cat, "t")
 
 def test_duplicate_check_names_rejected(spark, sf_dir):
     from kin_data_pipeline_spark.plans import checks as C
@@ -390,15 +396,20 @@ def test_erasure_and_changelog_refuse_bucketed_layout(spark, tmp_path):
         catalog.apply_changelog("t", log, ["id"])
 
 
-def test_vacuum_heals_tables_visible_only_through_scratch(spark, tmp_path):
+def test_vacuum_heals_tables_visible_only_through_scratch(spark, tmp_path, crash):
+    """A table whose FIRST write crashed before its log entry does not
+    exist — list_tables and exists() ignore its uncommitted files — and
+    vacuum's all-tables mode still finds and removes them."""
     import os as _os
 
     catalog = Catalog(spark, str(tmp_path / "wh"))
     df = spark.createDataFrame([(1, "a")], "id long, s string")
-    catalog.write_full("t", df, date_col=None)
-    # crash window: root renamed away, staging never renamed in — the
-    # table is now INVISIBLE to list_tables (only dotted entries remain)
-    _os.rename(catalog.path("t"), catalog.path("t.__precompact"))
-    assert "t" not in catalog.list_tables()
+    with crash.at(txlog, "create"):
+        catalog.write_full("t", df, date_col=None)
+    crash.recover()
+    assert crash.files_on_disk(catalog, "t")
+    assert "t" not in catalog.list_tables() and not catalog.exists("t")
     catalog.vacuum(min_age_s=0.0)  # all-tables mode must still find it
+    assert not _os.path.exists(catalog.path("t"))
+    catalog.write_full("t", df, date_col=None)
     assert sorted(r["id"] for r in catalog.table("t").collect()) == [1]

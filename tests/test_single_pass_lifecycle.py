@@ -1,16 +1,17 @@
-"""Round-12 single-pass lifecycle internals: delete_by_keys' flagged
-one-job rewrite (survivors + erased rows from ONE scan, commit marked
-``changes_delete_only``), the staged-append linked insert commit (change
-files share inodes with the table, no full-table directory diff), the
-date-cleanup hardlinked delete staging, and the mixed partitioned/flat
-change-dir span read (ADVICE r11 #2)."""
+"""Single-pass lifecycle internals: delete_by_keys' flagged one-job
+rewrite (survivors + erased rows from ONE scan, commit marked
+``changes_delete_only``), the append commit whose change feed is its own
+added files, the date cleanup whose change feed is the files it removed,
+and the mixed partitioned/flat change-file span read (ADVICE r11 #2)."""
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import functions as F
 
+from kin_data_pipeline_spark.plans import txlog
 from kin_data_pipeline_spark.plans.engine import Catalog
 
 DDL = "id long, grp string, val long"
@@ -20,10 +21,6 @@ def _mk(spark, tmp_path, rows, name="t", date_col=None):
     cat = Catalog(spark, str(tmp_path / "wh"))
     cat.write_full(name, spark.createDataFrame(rows, DDL), date_col)
     return cat
-
-
-def _changes_dir(cat, name, version):
-    return os.path.join(cat._versions_dir(name, version), "changes")
 
 
 def test_delete_by_keys_commits_delete_only_changes(spark, tmp_path):
@@ -67,8 +64,7 @@ def test_delete_by_keys_partitioned_cdf_fills_partition_column(spark, tmp_path):
     cat.enable_versioning("t")
     assert cat.delete_by_keys("t", "grp", ["b"]) == 2
     # partition layout preserved on the rewritten table
-    root = cat.path("t")
-    assert any(e.startswith("d=") for e in os.listdir(root))
+    assert all("/d=" in f for f in cat.table("t").inputFiles())
     # change files keep their d=... dirs; the reader restores the column
     ch = cat.table_changes("t", 0, 1)
     rows = sorted((r.id, str(r.d), r._change_type) for r in ch.collect())
@@ -132,18 +128,17 @@ def test_staged_append_links_change_files(spark, tmp_path):
     cat.write_append("t", spark.createDataFrame([(2, "b", 20)], DDL), None)
     entry = cat.history("t")[-1]
     assert entry.get("changes_insert_only") is True
-    ch_dir = _changes_dir(cat, "t", 1)
-    files = [
-        os.path.join(r, f)
-        for r, _, fs in os.walk(ch_dir)
-        for f in fs
-        if f.endswith(".parquet")
-    ]
-    assert files, "insert-only commit stored no change files"
-    # change files share inodes with the table's data files (linked, not
-    # copied), and no __appending staging dir is left behind
-    assert all(os.stat(f).st_nlink >= 2 for f in files)
-    assert not os.path.exists(cat.path("t.__appending"))
+    # the commit's change feed links the very files it added to the table:
+    # nothing is copied or staged beside them
+    tip = txlog.tip(cat.path("t"))
+    feed = [f["path"] for f in tip["changes"]["files"]]
+    assert feed, "insert-only commit stored no change files"
+    assert feed == tip["add"]
+    live = {
+        os.path.relpath(urlparse(f).path, cat.path("t"))
+        for f in cat.table("t").inputFiles()
+    }
+    assert set(feed) <= live
     ch = cat.table_changes("t", 0, 1)
     assert [(r.id, r._change_type) for r in ch.collect()] == [(2, "insert")]
 

@@ -1,6 +1,6 @@
 """Catalog snapshots / time travel: tagged zero-copy versions that survive
 every later write path (overwrite, append, upsert, compaction), instant
-restore with the compaction swap discipline, and hygiene (list_tables
+restore as one commit, vacuum retention, and hygiene (list_tables
 exclusion, clone/bucketed guardrails)."""
 
 from __future__ import annotations
@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from kin_data_pipeline_spark.plans import txlog
 from kin_data_pipeline_spark.plans.engine import Catalog
 
 def _rows(df):
@@ -33,17 +34,15 @@ def test_snapshot_survives_overwrite_and_restore_rolls_back(spark, cat):
     # the snapshot outlives its own restore
     assert cat.list_snapshots("t") == ["v1"]
 
-def test_snapshot_is_zero_copy_hardlinks(spark, cat):
+def test_snapshot_is_zero_copy(spark, cat, crash):
     cat.write_full("t", _df(spark, 1, 2), date_col=None)
+    on_disk = crash.files_on_disk(cat, "t")
     cat.snapshot("t", "v1")
-    snap_data = cat._snapshot_dir("t", "v1") + "/data"
-    linked = 0
-    for root, _dirs, files in os.walk(snap_data):
-        for f in files:
-            st = os.stat(os.path.join(root, f))
-            if st.st_nlink >= 2:
-                linked += 1
-    assert linked > 0, "snapshot copied bytes instead of hardlinking"
+    # the tag names the table's own files: no byte was copied
+    assert crash.files_on_disk(cat, "t") == on_disk
+    assert sorted(cat.table_at("t", "v1").inputFiles()) == sorted(
+        cat.table("t").inputFiles()
+    )
 
 def test_snapshot_unaffected_by_append_upsert_compact(spark, cat):
     cat.write_full("t", _df(spark, 1, 2), date_col=None)
@@ -90,14 +89,12 @@ def test_snapshot_guardrails(spark, cat):
         cat.snapshot("alias", "v1")
     with pytest.raises(ValueError, match="invalid snapshot tag"):
         cat.snapshot("src", "../escape")
-    # empty/whitespace tags would resolve os.path.join to the snapshots
-    # BASE dir — publishing AT the base and turning 'data'/'schema.json'
-    # into bogus list_snapshots entries
+    # empty and whitespace-only tags name nothing
     for bad in ("", "   "):
         with pytest.raises(ValueError, match="invalid snapshot tag"):
             cat.snapshot("src", bad)
-    # a tag colliding with the atomic-publish scratch suffix would be
-    # hidden by list_snapshots and rmtree'd by the next base-tag snapshot
+    # tags are dot-separated words; a word may not start with '_' or '.'
+    # (names the catalog keeps for itself)
     with pytest.raises(ValueError, match="invalid snapshot tag"):
         cat.snapshot("src", "x.__staging")
     # snapshot dirs never surface as tables
@@ -138,7 +135,7 @@ def test_diff_snapshot_refuses_schema_drift(spark, cat):
 
 def test_restore_clears_interim_bucket_layout(spark, cat):
     # snapshot plain -> convert the live table to bucketed -> restore the
-    # tag: a surviving bucket sidecar would route table() through a
+    # tag: a surviving bucket record would route table() through a
     # bucketed scan over restored non-bucket-named files
     cat.write_full("t", _df(spark, 1, 2), date_col=None)
     cat.snapshot("t", "v1")
@@ -170,7 +167,10 @@ def test_delete_by_keys_preserves_partition_layout(spark, cat):
     cat.write_full("t", df, date_col="d")
     assert cat.delete_by_keys("t", "id", [2]) == 1
     assert sorted(r[0] for r in cat.table("t").select("id").collect()) == [1, 3]
-    parts = [e for e in os.listdir(cat.path("t")) if e.startswith("d=")]
+    parts = {
+        seg for f in cat.table("t").inputFiles() for seg in f.split("/")
+        if seg.startswith("d=")
+    }
     assert sorted(parts) == ["d=2024-01-01", "d=2024-01-02"]
 
 def test_delete_by_keys_guardrails(spark, cat):
@@ -198,48 +198,60 @@ def test_vacuum_prunes_snapshots_to_keep_last(spark, cat):
 
 def test_vacuum_sweeps_aged_orphan_scratch_but_spares_fresh(spark, cat):
     cat.write_full("t", _df(spark, 1), date_col=None)
-    stale = cat.path("t.__staging")
+    # the staging directory of a crashed (or still running) write
+    stale = os.path.join(cat.path("t"), "_tmp-orphan")
     os.makedirs(stale)
-    with open(os.path.join(stale, "part-junk"), "w") as f:
+    with open(os.path.join(stale, "part-junk.parquet"), "w") as f:
         f.write("x")
-    # fresh scratch (age 0) survives a retention-guarded vacuum ...
-    assert cat.vacuum("t", min_age_s=3600.0)["scratch_removed"] == []
+    # fresh files (age 0) survive a retention-guarded vacuum — they may be
+    # a concurrent writer's, not yet committed ...
+    assert cat.vacuum("t", min_age_s=3600.0)["files_removed"] == []
     assert os.path.isdir(stale)
-    # ... and is swept once it is older than the retention window
+    # ... and are swept once they are older than the retention window
     report = cat.vacuum("t", min_age_s=0.0)
-    assert report["scratch_removed"] == ["t.__staging"]
+    assert report["files_removed"] == ["t/_tmp-orphan"]
     assert not os.path.exists(stale)
     assert _rows(cat.table("t")) == [(1, "r1")]
 
 
-def test_vacuum_heals_crashed_swap_before_sweeping(spark, cat):
-    import shutil
-
+def test_vacuum_heals_crashed_swap_before_sweeping(spark, cat, crash):
+    """A crash after a rewrite's log entry but before it deleted the files
+    it replaced loses nothing: the rewritten table reads, and vacuum then
+    deletes the replaced files."""
     cat.write_full("t", _df(spark, 1, 2), date_col=None)
-    # simulate a crash inside the rename-aside window: root renamed away,
-    # staging never renamed in
-    os.rename(cat.path("t"), cat.path("t.__precompact"))
-    assert not os.path.exists(cat.path("t"))
+    old = crash.live_files(cat, "t")
+    with crash.at(Catalog, "_delete_files"):
+        cat.write_full("t", _df(spark, 3), date_col=None)
+    crash.recover()
+    assert _rows(cat.table("t")) == [(3, "r3")]
+    assert old <= crash.files_on_disk(cat, "t")
     cat.vacuum("t", min_age_s=0.0)
-    assert _rows(cat.table("t")) == [(1, "r1"), (2, "r2")]
-    assert not os.path.exists(cat.path("t.__precompact"))
+    assert crash.files_on_disk(cat, "t") == crash.live_files(cat, "t")
+    assert _rows(cat.table("t")) == [(3, "r3")]
 
 
-def test_vacuum_sweeps_half_published_snapshot_staging(spark, cat):
+def test_vacuum_keeps_files_a_tag_pins(spark, cat, crash):
+    """Files a rewrite replaced stay on disk while a tag names them, even
+    through vacuum; dropping the tag deletes them."""
     cat.write_full("t", _df(spark, 1), date_col=None)
     cat.snapshot("t", "good")
-    half = cat._snapshot_dir("t", "bad") + ".__staging"
-    os.makedirs(os.path.join(half, "data"))
-    report = cat.vacuum("t", min_age_s=0.0)
-    assert report["scratch_removed"] == ["t.__snapshots/bad.__staging"]
+    pinned = crash.live_files(cat, "t")
+    cat.write_full("t", _df(spark, 2), date_col=None)
+    assert cat.vacuum("t", min_age_s=0.0)["files_removed"] == []
     assert cat.list_snapshots("t") == ["good"]
+    assert _rows(cat.table_at("t", "good")) == [(1, "r1")]
+    cat.drop_snapshot("t", "good")
+    assert not pinned & crash.files_on_disk(cat, "t")
+    assert _rows(cat.table("t")) == [(2, "r2")]
 
 
-def test_vacuum_sweeps_orphaned_journal_tmp(spark, cat):
-    cat.write_full("t", _df(spark, 1), date_col=None)
-    jt = cat._swap_journal("t") + ".tmp"
-    with open(jt, "w") as f:
-        f.write('{"entries": []}')
-    report = cat.vacuum("t", min_age_s=0.0)
-    assert os.path.basename(jt) in report["scratch_removed"]
-    assert not os.path.exists(jt)
+def test_vacuum_trims_log_of_table_without_history(spark, cat):
+    """A table without history needs only its tip: vacuum drops the older
+    log entries, and the table still reads and takes new commits."""
+    for i in range(3):
+        cat.write_full("t", _df(spark, i), date_col=None)
+    assert len(txlog.numbers(cat.path("t"))) == 3
+    cat.vacuum("t", min_age_s=0.0)
+    assert len(txlog.numbers(cat.path("t"))) == 1
+    cat.write_append("t", _df(spark, 7), date_col=None)
+    assert _rows(cat.table("t")) == [(2, "r2"), (7, "r7")]

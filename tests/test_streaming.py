@@ -3,8 +3,6 @@ the batch answer once all files are processed (SURVEY.md §2.9 superset)."""
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import functions as F
 
 from kin_data_pipeline_spark.sources.catalog import load_table
@@ -294,6 +292,7 @@ def test_streaming_cdf_changelog_commits_distributed_and_snapshot_free(spark, tm
 
     from pyspark.sql.types import _parse_datatype_string
 
+    from kin_data_pipeline_spark.plans import txlog
     from kin_data_pipeline_spark.plans.engine import Catalog
     from kin_data_pipeline_spark.streaming.cdf_source import (
         CatalogChangesBatchReader,
@@ -319,9 +318,10 @@ def test_streaming_cdf_changelog_commits_distributed_and_snapshot_free(spark, tm
     assert len(parts) > 1, "multi-file commit must fan out over its files"
     assert all(isinstance(p, _ChangeFilePartition) for p in parts)
 
-    # snapshots gone, change files remain: the stream must still serve v1
-    for v in (0, 1):
-        shutil.rmtree(os.path.join(str(tmp_path / "wh"), "t.__versions", f"v{v}", "data"))
+    # v0's data gone, v1's change files remain: the stream must still
+    # serve v1 from them alone
+    for f in txlog.versions(cat.path("t"))[0]["files"]:
+        os.remove(os.path.join(cat.path("t"), f["path"]))
     q = (
         stream_table_changes(spark, cat.warehouse_dir, "t", ddl)
         .writeStream.format("memory").queryName("cdf_dist")

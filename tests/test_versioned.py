@@ -9,12 +9,18 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from kin_data_pipeline_spark.plans import txlog
 from kin_data_pipeline_spark.plans.engine import Catalog
+
+
+def _local(uri: str) -> str:
+    from urllib.parse import urlparse
+
+    return urlparse(uri).path
 
 
 def _mk(spark, tmp_path, rows, name="t", date_col=None):
@@ -76,9 +82,13 @@ def test_table_as_of_timestamp_resolution(spark, tmp_path):
 
 
 def test_non_versioned_tables_pay_nothing(spark, tmp_path):
+    """Without history only the tip's files are kept: a rewrite deletes
+    the files it replaced as soon as it commits."""
     cat = _mk(spark, tmp_path, ROWS1)
     cat.write_append("t", spark.createDataFrame(ROWS2, "id long, grp string, val long"), None)
-    assert not os.path.exists(cat._versions_dir("t"))
+    replaced = cat.table("t").inputFiles()
+    cat.write_full("t", spark.createDataFrame(ROWS2, "id long, grp string, val long"), None)
+    assert replaced and not any(os.path.exists(_local(f)) for f in replaced)
     with pytest.raises(ValueError, match="not versioned"):
         cat.history("t")
 
@@ -111,7 +121,8 @@ def test_vacuum_versions_retention(spark, tmp_path):
     dropped = cat.vacuum_versions("t", keep_last=2)
     assert dropped == [0, 1]
     assert [e["version"] for e in cat.history("t")] == [2, 3]
-    assert not os.path.isdir(cat._versions_dir("t", 0))
+    # the dropped versions' log entries are gone with them
+    assert len(txlog.entries(cat.path("t"))) == 2
     assert cat.table_at_version("t", 3).count() == 5
     with pytest.raises(ValueError, match="no version 0"):
         cat.table_at_version("t", 0)
@@ -122,30 +133,36 @@ def test_vacuum_versions_retention(spark, tmp_path):
     assert cat.history("t")[-1]["version"] == 4
 
 
-def test_crash_orphan_version_dir_recovered(spark, tmp_path):
-    """A crash between the version-dir rename and the log update leaves an
-    unlogged orphan at the next version number; the log is the authority
-    and the next commit must clear and reuse the slot."""
+def test_crash_orphan_version_dir_recovered(spark, tmp_path, crash):
+    """A crash after a commit's data files are written but before its log
+    entry leaves uncommitted files: the log is the authority, so no read
+    sees them, the next commit takes the version number they never got,
+    and vacuum removes them."""
     cat = _mk(spark, tmp_path, ROWS1)
     cat.enable_versioning("t")
-    orphan = cat._versions_dir("t", 1)
-    os.makedirs(os.path.join(orphan, "data"))
-    with open(os.path.join(orphan, "data", "junk"), "w") as fh:
-        fh.write("stale")
-    cat.write_append("t", spark.createDataFrame(ROWS2, "id long, grp string, val long"), None)
+    rows2 = spark.createDataFrame(ROWS2, "id long, grp string, val long")
+    with crash.at(txlog, "create"):
+        cat.write_append("t", rows2, None)
+    crash.recover()
+    assert [e["version"] for e in cat.history("t")] == [0]
+    assert cat.table("t").count() == 2
+    cat.write_append("t", rows2, None)
     assert [e["version"] for e in cat.history("t")] == [0, 1]
-    assert cat.table_at_version("t", 1).count() == 3  # orphan junk replaced
-    assert not os.path.exists(os.path.join(orphan, "data", "junk"))
+    assert cat.table_at_version("t", 1).count() == 3
+    assert crash.files_on_disk(cat, "t") > crash.live_files(cat, "t")
+    assert cat.vacuum("t", min_age_s=0.0)["files_removed"]
+    assert crash.files_on_disk(cat, "t") == crash.live_files(cat, "t")
+    assert cat.table("t").count() == 3
+    assert cat.table_at_version("t", 0).count() == 2
 
 
 def test_versions_survive_live_rewrites_zero_copy(spark, tmp_path):
-    """Hardlinked version data survives overwrite/compact of the live
-    table (Spark never mutates parquet in place)."""
+    """A version's files survive overwrite/compact of the live table: a
+    versioned table keeps every file a retained version reads, and no
+    data is copied to keep it."""
     cat = _mk(spark, tmp_path, ROWS1)
     cat.enable_versioning("t")
-    v0_files = []
-    for root, _, files in os.walk(os.path.join(cat._versions_dir("t", 0), "data")):
-        v0_files += [os.path.join(root, f) for f in files]
+    v0_files = [_local(f) for f in cat.table_at_version("t", 0).inputFiles()]
     assert v0_files
     cat.write_full("t", spark.createDataFrame(ROWS2, "id long, grp string, val long"), None)
     cat.compact("t", None)
@@ -224,10 +241,9 @@ def test_restore_version_rolls_back_and_commits(spark, tmp_path):
 
 
 def test_restore_version_swaps_schema_sidecar(spark, tmp_path):
-    """Restoring across a schema evolution must also restore the live
-    sidecar: a post-restore read returns the OLD column set, not the
-    widened tip's (the sidecar-ordering crash window restore(tag)
-    documents)."""
+    """Restoring across a schema evolution must also restore the recorded
+    schema: a post-restore read returns the OLD column set, not the
+    widened tip's."""
     cat = _mk(spark, tmp_path, ROWS1)
     cat.enable_versioning("t")  # v0: (id, grp, val)
     widened = spark.createDataFrame(
@@ -330,12 +346,17 @@ def test_streaming_ingest_commits_one_version_per_microbatch(spark, tmp_path):
 
 
 def test_log_write_is_atomic(spark, tmp_path):
+    """Entries are created exclusively: a taken entry number can never be
+    overwritten, and committing leaves nothing but entries in the log."""
     cat = _mk(spark, tmp_path, ROWS1)
     cat.enable_versioning("t")
-    log = cat._versions_log("t")
-    with open(log) as fh:
-        entries = json.load(fh)
-    assert entries and not os.path.exists(log + ".tmp")
+    root = cat.path("t")
+    tip = txlog.tip(root)
+    assert not txlog.create(root, {**tip, "operation": "forged"})
+    assert txlog.tip(root)["operation"] == "enable_versioning"
+    assert sorted(os.listdir(os.path.join(root, txlog.LOG))) == [
+        f"{n:020d}.json" for n in txlog.numbers(root)
+    ]
 
 
 def test_concurrent_sibling_mutators_commit_one_version_each(spark, tmp_path):
@@ -400,14 +421,13 @@ def test_changelog_bearing_commits_never_rediff_snapshots(spark, tmp_path):
     hist = cat.history("t")
     assert [e.get("changes") for e in hist] == [False, True, True, True, True, True]
 
-    import os as _os
-
-    for e in hist:
-        shutil.rmtree(
-            _os.path.join(
-                str(tmp_path / "wh"), "t.__versions", f"v{e['version']}", "data"
-            )
-        )
+    root = cat.path("t")
+    entries = txlog.entries(root)
+    feed = {
+        f["path"] for e in entries for f in (e["changes"] or {}).get("files", ())
+    }
+    for path in {f["path"] for e in entries for f in e["files"]} - feed:
+        os.remove(os.path.join(root, path))
     # per-commit reads straight from the stored change files; the upsert
     # knew which rows pair by key, so the matched row is TYPED
     # update_preimage/update_postimage (Delta CDF shape) and only the
@@ -502,12 +522,14 @@ def test_commit_timestamps_strictly_increase_even_against_clock(spark, tmp_path)
     the next commit must still land strictly after it."""
     cat = _mk(spark, tmp_path, [(1, "a", 10)])
     cat.enable_versioning("t")
-    log_path = str(tmp_path / "wh" / "t.__versions" / "_log.json")
+    root = cat.path("t")
+    n = txlog.numbers(root)[-1]
+    log_path = os.path.join(root, txlog.LOG, f"{n:020d}.json")
     with open(log_path) as f:
-        entries = json.load(f)
-    entries[-1]["ts"] += 100.0  # simulate a commit on a fast/skewed clock
+        entry = json.load(f)
+    entry["ts"] += 100.0  # simulate a commit on a fast/skewed clock
     with open(log_path, "w") as f:
-        json.dump(entries, f)
+        json.dump(entry, f)
     cat.write_append(
         "t", spark.createDataFrame([(2, "b", 20)], "id long, grp string, val long"), None
     )
