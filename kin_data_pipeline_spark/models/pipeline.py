@@ -121,7 +121,7 @@ def build_kin_models(sf_dir: str, ivm: bool = False) -> list[Model]:
     models = [
         # --- facts (kin_main_warehouse) ---
         # fact contracts gate the write: key integrity + value sanity
-        # (one fused aggregation per fact; plans/checks.py)
+        # (enforced inside the fact's own write; plans/checks.py)
         # facts are the tables ops point-probe by txn/account id (support
         # lookups, dedup audits), so they carry parquet bloom filters on
         # the id — row-group skipping for `id = X` beside the date

@@ -1,19 +1,18 @@
-"""Declarative data-quality checks over catalog tables — the dbt-style
-test layer warehouse pipelines attach to their models (the reference relies
-on Snowflake constraints plus manual dashboard eyeballing; here checks are
-explicit, runnable, and cheap).
-
-Every check compiles to ONE aggregate over the table — a violation COUNT,
-not a violation list — so a check on a 100 TB table is a single scan with
-partial aggregation, no shuffle beyond the final reduce, and several checks
-on one table fuse into a single pass via ``run_checks``'s combined
-aggregation. Violation rows can be fetched separately for debugging
-(``violations`` returns the filtered frame lazily).
+"""Declarative data-quality checks — the dbt-style test layer warehouse
+pipelines attach to their models (the reference relies on Snowflake
+constraints). One write-time contract enforces them: ``enforce`` folds a
+model's row checks and a table's CHECK constraints alike into the written
+projection, and the Catalog runs ``assert_unique`` on the written key
+columns before it commits. ``run_checks``, ``assert_checks`` and
+``violations`` are the standalone audit API over a stored table: one
+aggregation pass of violation counts, or the offending rows lazily.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import functools
+import json
+from collections.abc import Mapping, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -21,40 +20,24 @@ from pyspark.sql import functions as F
 
 @dataclass(frozen=True)
 class Check:
-    """One named predicate that every row (or group) must satisfy."""
+    """One named rule. A row check's ``predicate`` is TRUE on a violating
+    row (NULL passes, as in SQL CHECK); ``unique`` carries its key
+    ``cols`` instead."""
 
     name: str
-    # count of violating rows, as an aggregate expression
-    agg: Column
-    # filter producing the violating rows (debugging path)
     predicate: Column | None = None
+    cols: tuple[str, ...] = ()
+
+def _any(conds) -> Column:
+    return functools.reduce(lambda a, b: a | b, conds)
 
 def not_null(*cols: str) -> Check:
-    cond = None
-    for c in cols:
-        cc = F.col(c).isNull()
-        cond = cc if cond is None else (cond | cc)
-    return Check(
-        name=f"not_null({', '.join(cols)})",
-        agg=F.sum(cond.cast("long")),
-        predicate=cond,
-    )
+    return Check(f"not_null({', '.join(cols)})", _any(F.col(c).isNull() for c in cols))
 
 def unique(*cols: str) -> Check:
-    # duplicates = non-null-keyed rows beyond the first per key. NULL-key
-    # rows are ignored (count_distinct drops them, so the base count must
-    # too — otherwise one legitimately-nullable key row reads as a
-    # duplicate); pair with not_null to forbid NULL keys. Fuses into
-    # run_checks' single aggregation like every other check.
-    nn = None
-    for c in cols:
-        cc = F.col(c).isNotNull()
-        nn = cc if nn is None else (nn & cc)
-    return Check(
-        name=f"unique({', '.join(cols)})",
-        agg=(F.sum(nn.cast("long")) - F.count_distinct(*[F.col(c) for c in cols])),
-        predicate=None,
-    )
+    # rows with a NULL key component are ignored; pair with not_null to
+    # forbid NULL keys
+    return Check(f"unique({', '.join(cols)})", cols=cols)
 
 def accepted_values(col: str, values: Sequence) -> Check:
     # NULLs are always ignored (dbt semantics — pair with not_null to forbid
@@ -62,34 +45,63 @@ def accepted_values(col: str, values: Sequence) -> Check:
     # the whole predicate NULL under three-valued logic, which would make
     # the check vacuously pass on ANY value.
     vals = [v for v in values if v is not None]
-    cond = F.col(col).isNotNull() & ~F.col(col).isin(vals)
     # Parameter values are part of the name: two accepted_values() on the
     # same column with different lists are DIFFERENT checks, and run_checks
     # keys its result dict by name.
     return Check(
-        name=f"accepted_values({col}, {vals!r})",
-        agg=F.sum(cond.cast("long")),
-        predicate=cond,
+        f"accepted_values({col}, {vals!r})",
+        F.col(col).isNotNull() & ~F.col(col).isin(vals),
     )
 
 def non_negative(*cols: str) -> Check:
-    cond = None
-    for c in cols:
-        cc = F.col(c) < 0
-        cond = cc if cond is None else (cond | cc)
-    return Check(
-        name=f"non_negative({', '.join(cols)})",
-        agg=F.sum(cond.cast("long")),
-        predicate=cond,
-    )
+    return Check(f"non_negative({', '.join(cols)})", _any(F.col(c) < 0 for c in cols))
 
 def in_range(col: str, lo, hi) -> Check:
-    cond = (F.col(col) < lo) | (F.col(col) > hi)
-    return Check(
-        name=f"in_range({col}, {lo}, {hi})",
-        agg=F.sum(cond.cast("long")),
-        predicate=cond,
-    )
+    return Check(f"in_range({col}, {lo}, {hi})", (F.col(col) < lo) | (F.col(col) > hi))
+
+def enforce(
+    df: DataFrame, checks: Sequence[Check], constraints: Mapping[str, str] | None = None
+) -> DataFrame:
+    """``df`` with every row check of ``checks`` and every CHECK
+    constraint of ``constraints`` ({name: sql_expr}) evaluated per row
+    while it is written: a task-side ``raise_error`` folded into the first
+    projected column, so there is no separate validation pass and the job
+    aborts on the first violation with the check's name and the row as
+    JSON. A constraint violates only where its expression is FALSE (SQL
+    CHECK semantics). ``unique`` checks are left to ``assert_unique``."""
+    rows = [
+        Check(f"CHECK constraint {n!r} ({e})", F.expr(e).eqNullSafe(F.lit(False)))
+        for n, e in sorted((constraints or {}).items())
+    ] + [c for c in checks if c.predicate is not None]
+    if not rows or not df.columns:
+        return df
+    first = df.columns[0]
+    row = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
+    wrapped = F.col(first)
+    for c in reversed(rows):
+        msg = F.concat(F.lit(f"{c.name} violated by row: "), row)
+        wrapped = F.when(c.predicate, F.raise_error(msg)).otherwise(wrapped)
+    return df.withColumn(first, wrapped)
+
+def assert_unique(df: DataFrame, checks: Sequence[Check]) -> None:
+    """Raise ``ValueError`` naming the check and one duplicated key if a
+    ``unique`` check of ``checks`` has a key twice in ``df``. Keys with a
+    NULL component are ignored."""
+    for c in checks:
+        if not c.cols:
+            continue
+        keyed = df.where(~_any(F.col(k).isNull() for k in c.cols))
+        dup = keyed.groupBy(*c.cols).count().where("count > 1").limit(1).collect()
+        if dup:
+            key = json.dumps(dup[0].asDict(), default=str)
+            raise ValueError(f"{c.name} violated by duplicated key: {key}")
+
+def _violation_count(c: Check) -> Column:
+    if c.predicate is not None:
+        return F.sum(c.predicate.cast("long"))
+    # duplicates = non-null-keyed rows beyond the first per key
+    keyed = ~_any(F.col(k).isNull() for k in c.cols)
+    return F.sum(keyed.cast("long")) - F.count_distinct(*[F.col(k) for k in c.cols])
 
 def run_checks(df: DataFrame, checks: Sequence[Check]) -> dict[str, int]:
     """Evaluate all checks; returns {check_name: violation_count}.
@@ -106,7 +118,10 @@ def run_checks(df: DataFrame, checks: Sequence[Check]) -> dict[str, int]:
         # A name collision would silently keep only the last count — a
         # violated earlier check could be masked in assert_checks.
         raise ValueError(f"duplicate check names: {dupes}")
-    aggs = [F.coalesce(c.agg, F.lit(0)).cast("long").alias(str(i)) for i, c in enumerate(checks)]
+    aggs = [
+        F.coalesce(_violation_count(c), F.lit(0)).cast("long").alias(str(i))
+        for i, c in enumerate(checks)
+    ]
     row = df.agg(*aggs).collect()[0]
     return {c.name: int(row[str(i)]) for i, c in enumerate(checks)}
 

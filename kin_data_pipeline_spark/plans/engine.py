@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from kin_data_pipeline_spark.functions.compat import date_trunc
 from kin_data_pipeline_spark.plans import txlog
+from kin_data_pipeline_spark.plans.checks import Check, assert_unique, enforce
 from kin_data_pipeline_spark.plans.model import CADENCE_UNITS, Model, topo_sort
 
 #: Serializes the check-then-CREATE registration of bucketed tables in the
@@ -471,6 +472,17 @@ class Catalog:
         shutil.rmtree(os.path.join(self.path(name), staging), ignore_errors=True)
         return files
 
+    def _verify_unique(self, name: str, files: Sequence[dict], schema, checks) -> None:
+        """Run the ``unique`` checks of ``checks`` over a write's published,
+        uncommitted ``files``; on a duplicate, delete them and raise."""
+        if not any(c.cols for c in checks):
+            return
+        try:
+            assert_unique(self._read(name, _paths(files), schema), checks)
+        except ValueError:
+            self._delete_files(name, _paths(files), set())
+            raise
+
     def _write_changes(
         self,
         name: str,
@@ -536,9 +548,10 @@ class Catalog:
 
     # --- CHECK constraints (Delta ALTER TABLE ADD CONSTRAINT shape) -----
     # Declared per table in the log's props; enforced TASK-SIDE during
-    # every write of incoming data (raise_error wrapped into the written
-    # projection — one pass, no separate validation scan, the same
-    # job-abort shape Delta's invariant checker uses). SQL CHECK
+    # every write of incoming data by the same write-time contract as a
+    # model's row checks (plans/checks.enforce: raise_error folded into the
+    # written projection — one pass, no separate validation scan, the
+    # same job-abort shape Delta's invariant checker uses). SQL CHECK
     # semantics: a row violates only when the expression evaluates to
     # FALSE; NULL passes. Rewrites of rows already in the table (key
     # erasure, compaction) skip the check. Clone aliases do not inherit
@@ -577,27 +590,6 @@ class Catalog:
         del cons[cname]
         self._set_props(name, "drop_constraint", constraints=cons)
         return True
-
-    @staticmethod
-    def _checked(props: dict, df: DataFrame) -> DataFrame:
-        """Wrap incoming data so every declared CHECK is evaluated per
-        row DURING the write (task-side raise_error folded into the
-        first projected column — single pass, job aborts on the first
-        violation with the constraint name and the offending row)."""
-        cons = props.get("constraints") or {}
-        if not cons or not df.columns:
-            return df
-        first = df.columns[0]
-        wrapped = F.col(first)
-        for cname, expr in sorted(cons.items()):
-            msg = F.concat(
-                F.lit(f"CHECK constraint {cname!r} ({expr}) violated by row: "),
-                F.to_json(F.struct(*[F.col(c) for c in df.columns])),
-            )
-            wrapped = F.when(
-                F.expr(expr).eqNullSafe(F.lit(False)), F.raise_error(msg)
-            ).otherwise(wrapped)
-        return df.withColumn(first, wrapped)
 
     # --- IVM refresh state ----------------------------------------------
     # An IVM-maintained mart (Model.ivm) records which source version its
@@ -733,11 +725,13 @@ class Catalog:
         date_col: str | None,
         bloom_cols: Sequence[str] | None = None,
         shape_partitions: bool = True,
+        checks: Sequence[Check] = (),
     ) -> None:
-        """Replace the table with ``df``. A write that fails (a bad
-        source, a CHECK violation, an executor loss) commits nothing, so
-        the previous table stays as it was."""
-        self._write_full(name, df, date_col, bloom_cols, shape_partitions)
+        """Replace the table with ``df``, which must pass ``checks`` and
+        the table's CHECK constraints. A write that fails (a bad source,
+        a violated check, an executor loss) commits nothing, so the
+        previous table stays as it was."""
+        self._write_full(name, df, date_col, bloom_cols, shape_partitions, checks)
 
     def _write_full(
         self,
@@ -746,27 +740,28 @@ class Catalog:
         date_col: str | None,
         bloom_cols: Sequence[str] | None = None,
         shape_partitions: bool = True,
+        checks: Sequence[Check] = (),
         ivm: dict | None = None,
     ) -> None:
         """``write_full`` that records ``ivm`` as the table's IVM refresh
         state in the same commit, so an IVM refresh lands its mart data
         and its refresh state together."""
         base = self._tip(name)
-        df = self._checked(self._props(base), df)
+        schema = df.schema
+        df = enforce(df, checks, self._props(base).get("constraints"))
         if date_col is not None and shape_partitions:
             df = self._shape_partitioned_write(df, date_col)
         cols = self._bloom(name, self._props(base), df, bloom_cols)
         staging = self._write(name, df, cols, [date_col] if date_col else [])
+        files = self._publish(name, staging, date_col)
+        self._verify_unique(name, files, schema, checks)
         props = self._props(
-            base, schema=df.schema.jsonValue(), date_col=date_col,
+            base, schema=schema.jsonValue(), date_col=date_col,
             **{**_REWRITTEN, "ivm": ivm},
         )
         if bloom_cols is not None:
             props["bloom"] = list(bloom_cols)
-        self._commit(
-            name, "write_full", base,
-            files=self._publish(name, staging, date_col), props=props,
-        )
+        self._commit(name, "write_full", base, files=files, props=props)
 
     def write_append(
         self,
@@ -775,8 +770,10 @@ class Catalog:
         date_col: str | None,
         bloom_cols: Sequence[str] | None = None,
         shape_partitions: bool = True,
+        checks: Sequence[Check] = (),
     ) -> None:
-        """Add ``df``'s rows to the table. The commit's change feed is its
+        """Add ``df``'s rows to the table; only they must pass ``checks``
+        and the table's CHECK constraints. The commit's change feed is its
         own added files (new = old ⊎ df, so new EXCEPT ALL old = df): one
         evaluation and one write, nothing re-diffed. Concurrent appends
         both land — the loser of the race for a log entry rebases its
@@ -791,7 +788,8 @@ class Catalog:
             # aliased data with just the delta.
             self.write_full(name, self.table(name), date_col, bloom_cols)
             base = self._tip(name)
-        df = self._checked(self._props(base), df)
+        schema = df.schema
+        df = enforce(df, checks, self._props(base).get("constraints"))
         # An append must never NARROW the recorded schema: reads apply it,
         # so recording a frame that lacks an existing column would drop
         # that column from every read of the older files. Appends may ADD
@@ -808,10 +806,11 @@ class Catalog:
         cols = self._bloom(name, self._props(base), df, bloom_cols)
         staging = self._write(name, df, cols, [date_col] if date_col else [])
         added = self._publish(name, staging, date_col)
+        self._verify_unique(name, added, schema, checks)
 
         def on(tip):
             props = self._props(
-                tip, schema=df.schema.jsonValue(), date_col=date_col,
+                tip, schema=schema.jsonValue(), date_col=date_col,
                 buckets=None, ivm=None,
             )
             if bloom_cols is not None:
@@ -844,9 +843,11 @@ class Catalog:
         bucket_cols: Sequence[str],
         n_buckets: int,
         sort_cols: Sequence[str] | None = None,
+        checks: Sequence[Check] = (),
     ) -> None:
         """Overwrite ``name`` as a bucketed (optionally sort-within-bucket)
-        parquet table. ``sort_cols`` additionally pre-sorts each bucket
+        parquet table whose rows pass ``checks`` and the table's CHECK
+        constraints. ``sort_cols`` additionally pre-sorts each bucket
         file so a downstream sort-merge join skips its sort as well as
         its shuffle."""
         if self.is_versioned(name):
@@ -859,6 +860,8 @@ class Catalog:
                 "layout from its version history — drop versioning first"
             )
         base = self._tip(name)
+        schema = df.schema
+        df = enforce(df, checks, self._props(base).get("constraints"))
         ident = self._bucket_ident(name)
         self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
         wid = f"w-{uuid.uuid4().hex}"
@@ -871,6 +874,8 @@ class Catalog:
         if sort_cols:
             w = w.sortBy(*sort_cols)
         w.saveAsTable(ident)
+        files = txlog.file_stats(self.path(name), wid, None)
+        self._verify_unique(name, files, schema, checks)
         buckets = {
             "n_buckets": n_buckets,
             "bucket_cols": list(bucket_cols),
@@ -879,19 +884,22 @@ class Catalog:
         }
         # exclusive layout: a bucketed rewrite replaces any bloom record
         props = self._props(
-            base, schema=df.schema.jsonValue(), date_col=None, bloom=[],
+            base, schema=schema.jsonValue(), date_col=None, bloom=[],
             **{**_REWRITTEN, "buckets": buckets},
         )
-        self._commit(
-            name, "write_bucketed", base,
-            files=txlog.file_stats(self.path(name), wid, None), props=props,
-        )
+        self._commit(name, "write_bucketed", base, files=files, props=props)
 
     def write_zordered(
-        self, name: str, df: DataFrame, zorder_cols: Sequence[str], n_files: int = 16
+        self,
+        name: str,
+        df: DataFrame,
+        zorder_cols: Sequence[str],
+        n_files: int = 16,
+        checks: Sequence[Check] = (),
     ) -> None:
-        """Overwrite ``name`` with its files arranged along the Morton curve
-        over two numeric columns (operators/layout.py), so both columns
+        """Overwrite ``name`` with the rows of ``df``, which must pass
+        ``checks`` and the table's CHECK constraints, arranged along the
+        Morton curve over two numeric columns (operators/layout.py), so both columns
         carry tight per-file min/max and 2-D box predicates prune from the
         parquet footers alone. Quantization bounds come from one bounds
         aggregate over the frame (a 1-row driver probe, same class as the
@@ -901,7 +909,8 @@ class Catalog:
 
         x, y = zorder_cols
         base = self._tip(name)
-        df = df.persist()
+        schema = df.schema
+        df = enforce(df, checks, self._props(base).get("constraints")).persist()
         try:
             b = df.agg(
                 F.min(x).alias("xl"),
@@ -917,14 +926,13 @@ class Catalog:
             staging = self._write(name, out)
         finally:
             df.unpersist()
+        files = self._publish(name, staging, None)
+        self._verify_unique(name, files, schema, checks)
         # exclusive layout: a z-ordered rewrite replaces any bloom record
         props = self._props(
-            base, schema=df.schema.jsonValue(), date_col=None, bloom=[], **_REWRITTEN
+            base, schema=schema.jsonValue(), date_col=None, bloom=[], **_REWRITTEN
         )
-        self._commit(
-            name, "write_zordered", base,
-            files=self._publish(name, staging, None), props=props,
-        )
+        self._commit(name, "write_zordered", base, files=files, props=props)
 
     def bucketed_table(self, name: str) -> DataFrame:
         """Read a bucketed table WITH its bucket metadata (plain
@@ -1023,7 +1031,7 @@ class Catalog:
         if base is None:
             self.write_full(name, df, date_col)
             return
-        df = self._checked(base["props"], df)
+        df = enforce(df, (), base["props"].get("constraints"))
         existing = self.table(name)  # resolves clone aliases → source data
         survivors = existing.join(
             df.select(*key_cols).distinct(), key_cols, "left_anti"
@@ -1214,6 +1222,8 @@ class Catalog:
         )
         props = base["props"]
         part_col = props.get("date_col")  # keep the partition layout
+        # one file per (side, date) instead of one per (task, side, date)
+        flagged = flagged.hint("rebalance", flag, *([part_col] if part_col else []))
         cols = self._bloom(name, props, live, None)
         staging = self._write(
             name, flagged, cols, [flag] + ([part_col] if part_col else [])
@@ -1328,7 +1338,7 @@ class Catalog:
         if base is None:
             self.write_full(name, ups, date_col)
             return {"upserts": n_upserts, "deletes": n_deletes}
-        ups = self._checked(base["props"], ups)
+        ups = enforce(ups, (), base["props"].get("constraints"))
         existing = self.table(name)
         if set(data_cols) != set(existing.columns):
             raise ValueError(
@@ -2004,8 +2014,6 @@ class Runner:
         guard_plans: bool = True,
         report_path: str | None = None,
     ) -> list[RunResult]:
-        import time
-
         ctx = BuildContext(self.spark, self.catalog, run_date)
         results: list[RunResult] = []
         for m in topo_sort(models):
@@ -2037,8 +2045,6 @@ class Runner:
         results: list[RunResult],
         t0: float,
     ) -> None:
-        import time
-
         if m.clone_of is not None:
             self.catalog.clone(m.name, m.clone_of)
             results.append(
@@ -2084,25 +2090,24 @@ class Runner:
                 df = df.filter(
                     date_trunc(unit, F.col(m.date_col)) > F.lit(wm)
                 )
-        with self._contract(m, df) as df:
-            if m.bucket_by:
-                self.catalog.write_bucketed(
-                    m.name, df, m.bucket_by, m.n_buckets, sort_cols=m.bucket_by
-                )
-            elif m.zorder_by:
-                self.catalog.write_zordered(m.name, df, m.zorder_by, m.n_zfiles)
-            elif action == "full":
-                self.catalog.write_full(
-                    m.name, df, m.date_col,
-                    bloom_cols=m.bloom_filter_on,
-                    shape_partitions=not m.order_by,
-                )
-            else:
-                self.catalog.write_append(
-                    m.name, df, m.date_col,
-                    bloom_cols=m.bloom_filter_on,
-                    shape_partitions=not m.order_by,
-                )
+        # the write gates exactly the frame it lands on the model's checks:
+        # the post-watermark delta on incremental runs (an old violation
+        # can't block new appends), the full frame on refresh
+        if m.bucket_by:
+            self.catalog.write_bucketed(
+                m.name, df, m.bucket_by, m.n_buckets, sort_cols=m.bucket_by,
+                checks=m.checks,
+            )
+        elif m.zorder_by:
+            self.catalog.write_zordered(
+                m.name, df, m.zorder_by, m.n_zfiles, checks=m.checks
+            )
+        else:
+            write = self.catalog.write_full if action == "full" else self.catalog.write_append
+            write(
+                m.name, df, m.date_col, bloom_cols=m.bloom_filter_on,
+                shape_partitions=not m.order_by, checks=m.checks,
+            )
         stats = self.catalog.commit_stats(m.name)
         if m.versioned and not self.catalog.is_versioned(m.name):
             # first materialization of a versioned model: start the
@@ -2112,27 +2117,6 @@ class Runner:
             # versions
             self.catalog.enable_versioning(m.name)
         results.append(self._result(m.name, action, t0, stats))
-
-    @staticmethod
-    @contextlib.contextmanager
-    def _contract(m: Model, df: DataFrame):
-        """Gate exactly the frame about to be written on the model's
-        checks — the post-watermark delta on incremental runs (O(delta);
-        an old violation can't block new appends), the full frame on
-        refresh — aborting BEFORE the write. The frame is persisted across
-        check + write so its plan runs once, and unpersisted even when a
-        check fails (an expected path that must not leak a cached frame)."""
-        if not m.checks:
-            yield df
-            return
-        from kin_data_pipeline_spark.plans.checks import assert_checks
-
-        df = df.persist()
-        try:
-            assert_checks(df, m.checks, table=m.name)
-            yield df
-        finally:
-            df.unpersist()
 
     @staticmethod
     def _result(name: str, action: str, t0: float, stats: dict) -> RunResult:
@@ -2337,8 +2321,6 @@ class Runner:
         reference's full re-aggregation per cron tick
         (execute_snowflake_load.py:89-91).
         """
-        import time
-
         from kin_data_pipeline_spark.operators.incremental import (
             distinct_count_from_support,
             distinct_support,
@@ -2848,10 +2830,10 @@ class Runner:
                 signature=mart_sig,
                 versions=tips if spec.sources else None,
             )
-            with self._contract(m, df) as df:
-                cat._write_full(
-                    m.name, df, None, bloom_cols=m.bloom_filter_on, ivm=record
-                )
+            cat._write_full(
+                m.name, df, None, bloom_cols=m.bloom_filter_on, checks=m.checks,
+                ivm=record,
+            )
             stats = cat.commit_stats(m.name)
             # persist each dim's ENRICHMENT PROJECTION (broadcast-small)
             # beside the mart so the next dim edit can be key-diffed and
@@ -2908,8 +2890,6 @@ class Runner:
         ``RunResult`` rows accumulate into ``results`` (pass a list to
         observe them).
         """
-        import time
-
         from kin_data_pipeline_spark.streaming.cdf_source import (
             stream_table_changes,
         )

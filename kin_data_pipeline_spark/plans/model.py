@@ -207,9 +207,9 @@ class Model:
     # O1: the reference ORDER BYs on materialization (37 sites) — cosmetic
     # clustering of stored tables. Optional here; costs a sort before write.
     order_by: Sequence[str] = field(default_factory=tuple)
-    # Data-quality contract (plans/checks.py): evaluated on the built frame
-    # BEFORE the write, so a violated contract never lands in the warehouse.
-    # One fused aggregation pass per checked model.
+    # Data-quality contract (plans/checks.py): enforced by the write of
+    # exactly the frame being landed (the delta on incremental runs), so a
+    # violated contract fails the write and commits nothing.
     checks: Sequence[Any] = field(default_factory=tuple)
     # Plan-guard declaration (plans/guard.py): a model whose builder
     # INTENDS a broadcast nested-loop scan (linear corpus × tiny broadcast,

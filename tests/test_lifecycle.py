@@ -4,14 +4,21 @@ cleanup+refill idempotence, clone resolution, DAG ordering."""
 from __future__ import annotations
 
 import datetime
+import glob
+import os
+import re
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from kin_data_pipeline_spark.plans import txlog
+from kin_data_pipeline_spark.plans.checks import non_negative, not_null, unique
 from kin_data_pipeline_spark.plans.engine import Catalog, Runner
 from kin_data_pipeline_spark.plans.model import Model, topo_sort
 from kin_data_pipeline_spark.sources.catalog import load_table
+
+RUN = datetime.date(2024, 2, 1)
 
 def _models(sf_dir):
     def fact_events(ctx):
@@ -312,6 +319,79 @@ def test_data_quality_checks_single_pass(spark, sf_dir):
     assert viol.count() == bad["accepted_values(event_type, ['purchase'])"]
 
 
+def test_incremental_tick_checks_only_the_delta(spark, tmp_path):
+    """A model's checks gate exactly the rows a tick appends: a violation
+    already stored cannot block the tick, and a violating delta row fails
+    it with the check's name, commits nothing and leaves no staging."""
+    d = datetime.date
+    ddl = "id long, v string, date_key date"
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    catalog.write_full("t", spark.createDataFrame([(1, None, d(2024, 1, 1))], ddl), "date_key")
+    feed = [(1, None, d(2024, 1, 1)), (2, "b", d(2024, 1, 2))]
+    model = Model(
+        "t", lambda ctx: ctx.spark.createDataFrame(feed, ddl),
+        cadence="daily", date_col="date_key", checks=(not_null("v"),),
+    )
+    runner = Runner(spark, catalog)
+    assert [r.action for r in runner.run([model], d(2024, 1, 3))] == ["incremental"]
+    assert catalog.table("t").count() == 2
+    tip = txlog.tip(catalog.path("t"))["n"]
+    feed.append((3, None, d(2024, 1, 3)))
+    with pytest.raises(Exception, match=re.escape("not_null(v)")):
+        runner.run([model], d(2024, 1, 4))
+    assert txlog.tip(catalog.path("t"))["n"] == tip
+    assert catalog.table("t").count() == 2
+    assert not glob.glob(os.path.join(catalog.path("t"), "_tmp-*"))
+
+
+def test_refresh_breaking_unique_keeps_previous_version(spark, tmp_path):
+    """``unique`` is verified on the written keys before the commit: NULL
+    keys are ignored, and a duplicated key fails the refresh with the
+    check's name and the key, leaving the previous version and no files
+    of the failed write."""
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    docs = [(1, "a"), (2, "b"), (None, "n"), (None, "m")]
+    model = Model(
+        "docs", lambda ctx: ctx.spark.createDataFrame(docs, "doc_id long, text string"),
+        date_col=None, checks=(unique("doc_id"),),
+    )
+    runner = Runner(spark, catalog)
+    runner.run([model], RUN, "full_refresh")
+    before = _snapshot(catalog, "docs")
+    tip = txlog.tip(catalog.path("docs"))
+    docs[:] = [(1, "a"), (7, "x"), (7, "y")]
+    with pytest.raises(ValueError, match=r'unique\(doc_id\).*"doc_id": 7'):
+        runner.run([model], RUN, "full_refresh")
+    assert txlog.tip(catalog.path("docs"))["n"] == tip["n"]
+    assert _snapshot(catalog, "docs") == before
+    on_disk = glob.glob(os.path.join(catalog.path("docs"), "**", "*.parquet"), recursive=True)
+    assert len(on_disk) == len(tip["files"])
+
+
+def test_checked_model_evaluates_its_builder_once(spark, tmp_path):
+    """Row checks ride the write's own job: a full refresh of a checked
+    model runs as many Spark jobs as the same model without checks."""
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    sc = spark.sparkContext
+
+    def jobs(name, checks):
+        model = Model(
+            name, lambda ctx: ctx.spark.range(1000).selectExpr("id", "id % 7 AS v"),
+            date_col=None, checks=checks,
+        )
+        sc.setJobGroup(name, name)
+        try:
+            Runner(spark, catalog).run([model], RUN, "full_refresh")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    plain = jobs("plain", ())
+    assert plain >= 1
+    assert jobs("checked", (not_null("id"), non_negative("v"))) == plain
+
+
 def test_incremental_run_of_undated_model_stays_full(spark, sf_dir, tmp_path):
     """A model with date_col=None has no watermark axis: an incremental
     Runner pass must fall back to a full rewrite, never call
@@ -394,6 +474,37 @@ def test_erasure_and_changelog_refuse_bucketed_layout(spark, tmp_path):
     log = spark.createDataFrame([(1, "z", "U", 1)], "id long, s string, op string, seq long")
     with pytest.raises(ValueError, match="bucketed"):
         catalog.apply_changelog("t", log, ["id"])
+
+
+def test_key_erasure_writes_one_file_per_date_and_side(spark, tmp_path):
+    """delete_by_keys rebalances its single-pass write by (side, date): on
+    a table whose dates each span several files, the survivors and the
+    erased change feed come out as one file per date, not one per task."""
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    days = [datetime.date(2024, 1, d) for d in (1, 2, 3, 4)]
+    for batch in range(3):
+        rows = [(batch * 100 + i, str(i % 5), day) for i, day in enumerate(days * 10)]
+        catalog.write_append(
+            "t", spark.createDataFrame(rows, "id long, k string, date_key date"), "date_key"
+        )
+    catalog.enable_versioning("t")
+
+    def per_date(files):
+        return Counter(txlog.part_values(f["path"])["date_key"] for f in files)
+
+    assert set(per_date(txlog.tip(catalog.path("t"))["files"]).values()) == {3}
+    # one scan task per file, as on a table larger than a scan split
+    conf = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "1k")
+    try:
+        assert catalog.delete_by_keys("t", "k", ["0"]) == 24
+    finally:
+        spark.conf.set(conf, prev)
+    entry = txlog.tip(catalog.path("t"))
+    want = {str(day): 1 for day in days}
+    assert per_date(entry["files"]) == want
+    assert per_date(entry["changes"]["files"]) == want
 
 
 def test_vacuum_heals_tables_visible_only_through_scratch(spark, tmp_path, crash):
