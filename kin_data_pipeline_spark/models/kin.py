@@ -39,7 +39,10 @@ RUN_DATE = datetime.date(2024, 1, 31)
 # Session-scoped frame cache (sources/catalog.py::frame_cached): the
 # standalone query entries each rebuild the model chain from raw; sharing
 # the fact/AUB/VF/actives frames across queries turns ~10 rebuilds into 1
-# (same effect the materialized warehouse has in production).
+# (same effect the materialized warehouse has in production). A frame is
+# cached only when a second consumer asks for it: the Runner's lone build
+# of a fact stays uncached, so its watermark filter pushes down to the raw
+# scan and a tick reads one day instead of caching the whole history.
 
 def _cached(
     spark: SparkSession,

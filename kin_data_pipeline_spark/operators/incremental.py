@@ -85,34 +85,27 @@ def maintain_aggregate(
     matched null-safely (<=>), mirroring GROUP BY's NULL-is-one-group
     semantics.
     """
+    ct = F.col(change_type_col)
+    # a malformed change type must fail loudly, not silently skew sums:
+    # the sign itself raises task-side (plans/checks.enforce's pattern),
+    # so the guard rides the fold's own aggregation with no probe job.
+    # A NULL type matches neither branch and raises too.
     sign = (
-        F.when(
-            F.col(change_type_col).isin("insert", "update_postimage"),
-            F.lit(1),
-        )
-        .when(
-            F.col(change_type_col).isin("delete", "update_preimage"),
-            F.lit(-1),
-        )
-        .otherwise(F.lit(None))
-    )
-    # a malformed change type must fail loudly, not silently skew sums —
-    # the guard aggregates to ONE row (bounded driver probe)
-    bad = (
-        changes.filter(
-            ~F.col(change_type_col).isin(
-                "insert", "delete", "update_preimage", "update_postimage"
+        F.when(ct.isin("insert", "update_postimage"), F.lit(1))
+        .when(ct.isin("delete", "update_preimage"), F.lit(-1))
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit("unknown change type "),
+                    F.coalesce(F.concat(F.lit("'"), ct, F.lit("'")), F.lit("NULL")),
+                    F.lit(
+                        "; expected 'insert'/'delete'/'update_preimage'/"
+                        "'update_postimage' (the table_changes contract)"
+                    ),
+                )
             )
         )
-        .limit(1)
-        .collect()
     )
-    if bad:
-        raise ValueError(
-            f"unknown change type {bad[0][change_type_col]!r}; expected "
-            "'insert'/'delete'/'update_preimage'/'update_postimage' "
-            "(the table_changes contract)"
-        )
     delta = changes.groupBy(*group_cols).agg(
         F.sum(sign).cast("long").alias("__dn"),
         *[

@@ -84,8 +84,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # DAG runner (plans/engine.py) writes once per run; when the models are
 # instead evaluated ad hoc (driver correctness pass, bench, notebooks) the
 # shared substrates — fact scans, price dims, activity observations — would
-# be recomputed by every downstream query. `.cache()` + this registry give
-# the ad-hoc path the same reuse the warehouse gives the scheduled path.
+# be recomputed by every downstream query. This registry gives the ad-hoc
+# path the same reuse the warehouse gives the scheduled path, but a frame
+# is only `.cache()`d once a SECOND consumer asks for it: a lone consumer
+# (the Runner's build of a fact, whose watermark filter must push through
+# the projection and dedup down to the raw scan) plans against the source,
+# because a filter above an InMemoryRelation cannot push down and the cache
+# would materialize the whole history to append one day.
 # Keyed by Spark application id so a fresh session never sees stale frames.
 
 _FRAME_CACHE: dict[tuple, DataFrame] = {}
@@ -115,33 +120,46 @@ def frame_cache_source_frames(spark: SparkSession) -> dict:
 def frame_cache_clear(spark: SparkSession) -> None:
     """Drop this app's substrate registry (fingerprinting only: forces the
     next query build to re-register every substrate it depends on, so the
-    dependency inventory is per-query instead of first-toucher-order)."""
+    dependency inventory is per-query instead of first-toucher-order) and
+    unpersist the cached frames it drops, so none stays pinned."""
     app_id = spark.sparkContext.applicationId
     with _FRAME_CACHE_LOCK:
         for k in [k for k in _FRAME_CACHE if k[0] == app_id]:
-            del _FRAME_CACHE[k]
+            df = _FRAME_CACHE.pop(k)
+            if df.is_cached:
+                df.unpersist()
         for k in [k for k in _FRAME_SOURCE_FRAMES if k[0] == app_id]:
             del _FRAME_SOURCE_FRAMES[k]
 
 def frame_cached(
     spark: SparkSession, name: str, *key, build, truncate: bool = False
 ) -> DataFrame:
-    """Build-once, cache, and reuse a DataFrame within one Spark app.
-    Lock-guarded so concurrent DAG materialization (Runner.run_concurrent)
-    never double-builds a shared substrate frame. Reentrant: substrate
-    builders call other cached builders inside their ``build`` closure.
+    """Build once and reuse a DataFrame within one Spark app; cache it when
+    a second consumer asks for it. Lock-guarded so concurrent DAG
+    materialization (Runner.run_concurrent) never double-builds a shared
+    substrate frame. Reentrant: substrate builders call other cached
+    builders inside their ``build`` closure.
+
+    The first request registers the built frame UNCACHED under its key; a
+    second request for the key calls ``.cache()`` on that registered frame
+    and returns the same object. A lone consumer therefore plans against
+    the source: the Runner's watermark filter on a fact pushes through the
+    projection and ``distinct()`` down to the raw scan, so a daily tick
+    reads and shuffles one day, not the cached history. A frame whose
+    analyzed plan is not deterministic (``rand()``, ``uuid()``, …) is
+    cached on the first request, so all its consumers see one evaluation.
 
     ``truncate=True`` cuts the logical lineage at the substrate boundary
-    (``localCheckpoint`` instead of ``cache``): a ``.cache()`` frame keeps
-    its full logical plan, so EVERY downstream action re-runs Catalyst
-    analysis over the whole upstream tree even though execution hits the
-    InMemoryRelation — for deep chains (the KRE payout cascade) that
-    re-analysis costs seconds per consumer query. Checkpointing replaces
-    the plan with a LogicalRDD, so consumers plan against a leaf. Use it
-    for small, many-consumer substrates (day/app grain); keep ``cache``
-    for wide frames where losing size statistics could demote a broadcast.
-    Lazy (``eager=False``): the first toucher pays materialization, same
-    billing as the cache path."""
+    (``localCheckpoint`` instead of ``cache``, on the first request): a
+    ``.cache()`` frame keeps its full logical plan, so EVERY downstream
+    action re-runs Catalyst analysis over the whole upstream tree even
+    though execution hits the InMemoryRelation — for deep chains (the KRE
+    payout cascade) that re-analysis costs seconds per consumer query.
+    Checkpointing replaces the plan with a LogicalRDD, so consumers plan
+    against a leaf. Use it for small, many-consumer substrates (day/app
+    grain); keep ``cache`` for wide frames where losing size statistics
+    could demote a broadcast. Lazy (``eager=False``): the first toucher
+    pays materialization, same billing as the cache path."""
     k = (spark.sparkContext.applicationId, name, *key)
     with _FRAME_CACHE_LOCK:
         if k not in _FRAME_CACHE:
@@ -155,9 +173,13 @@ def frame_cached(
                 _FRAME_SOURCE_FRAMES.pop(sk, None)
             built = build()
             _FRAME_SOURCE_FRAMES[k] = built
-            _FRAME_CACHE[k] = (
-                built.localCheckpoint(eager=False) if truncate else built.cache()
-            )
+            if truncate:
+                built = built.localCheckpoint(eager=False)
+            elif not built._jdf.queryExecution().analyzed().deterministic():
+                built.cache()
+            _FRAME_CACHE[k] = built
+        elif not truncate and not _FRAME_CACHE[k].is_cached:
+            _FRAME_CACHE[k].cache()  # a second consumer: now worth keeping
         return _FRAME_CACHE[k]
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

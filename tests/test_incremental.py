@@ -7,6 +7,7 @@ must compose with the REAL CDF the versioned catalog emits."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from kin_data_pipeline_spark.operators.incremental import (
@@ -90,11 +91,16 @@ def test_malformed_change_type_raises(spark):
     agg = aggregate_base(
         spark.createDataFrame([("a", "x", 1)], DDL), ["grp"], {"sum_val": "val"}
     )
-    ch = spark.createDataFrame(
-        [("a", "x", 1, "upsert")], f"{DDL}, _change_type string"
-    )
-    with pytest.raises(ValueError, match="unknown change type"):
-        maintain_aggregate(agg, ch, ["grp"], {"sum_val": "val"})
+    # the guard is task-side (raise_error inside the fold's aggregation):
+    # building the plan runs no job, evaluating it fails. A NULL type is
+    # malformed too, not a row that sums as NULL.
+    for bad, shown in (("upsert", "'upsert'"), (None, "NULL")):
+        ch = spark.createDataFrame(
+            [("a", "x", 1, bad)], f"{DDL}, _change_type string"
+        )
+        out = maintain_aggregate(agg, ch, ["grp"], {"sum_val": "val"})
+        with pytest.raises(SparkRuntimeException, match=f"unknown change type {shown}"):
+            out.collect()
 
 
 def test_maintenance_composes_with_the_real_cdf(spark, tmp_path):

@@ -116,3 +116,87 @@ def test_streaming_source_agrees_with_batch_on_days(spark, sf_dir):
     got = {r["d"] for r in spark.table("__ts_canary").select("d").distinct().collect()}
     want = {r["d"] for r in batch_days.collect()}
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# Session frame cache: a substrate is cached when a second consumer asks.
+
+def test_frame_cache_first_request_registers_uncached(spark):
+    from kin_data_pipeline_spark.sources.catalog import frame_cache_names, frame_cached
+
+    df = frame_cached(spark, "__once", "k1", build=lambda: spark.range(5))
+    assert not df.is_cached
+    assert "__once" in frame_cache_names(spark)
+
+
+def test_frame_cache_second_request_caches_the_same_frame(spark):
+    from kin_data_pipeline_spark.sources.catalog import frame_cached
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(5)
+
+    first = frame_cached(spark, "__twice", "k1", build=build)
+    second = frame_cached(spark, "__twice", "k1", build=build)
+    assert second is first and second.is_cached
+    assert len(builds) == 1
+    assert second.count() == 5
+
+
+def test_frame_cache_nondeterministic_build_cached_on_first_request(spark):
+    from kin_data_pipeline_spark.sources.catalog import frame_cached
+
+    df = frame_cached(
+        spark, "__rand", "k1", build=lambda: spark.range(5).withColumn("r", F.rand())
+    )
+    assert df.is_cached
+
+
+def test_frame_cache_clear_unpersists(spark):
+    from kin_data_pipeline_spark.sources.catalog import (
+        frame_cache_clear,
+        frame_cache_names,
+        frame_cached,
+    )
+
+    frame_cached(spark, "__cleared", "k1", build=lambda: spark.range(5))
+    df = frame_cached(spark, "__cleared", "k1", build=lambda: spark.range(5))
+    assert df.is_cached
+    frame_cache_clear(spark)
+    assert not df.is_cached
+    assert "__cleared" not in frame_cache_names(spark)
+
+
+def test_runner_tick_on_a_lone_fact_consumer_appends_the_day_uncached(
+    spark, sf_dir, tmp_path
+):
+    """The Runner is the fact's only consumer on a tick, so its frame stays
+    uncached and the watermark filter reaches the raw scan; the append is
+    exactly the new day's rows."""
+    from kin_data_pipeline_spark.models import kin as K
+    from kin_data_pipeline_spark.models.pipeline import build_kin_models
+    from kin_data_pipeline_spark.plans.engine import Catalog, Runner
+    from kin_data_pipeline_spark.sources import catalog as src
+
+    backfill, tick = datetime.date(2024, 1, 20), datetime.date(2024, 1, 21)
+    src.frame_cache_clear(spark)  # the tick's key is requested here first
+    models = [
+        m for m in build_kin_models(sf_dir, ivm=True)
+        if m.name == "fact_kin_transaction"
+    ]
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    runner = Runner(spark, cat)
+    runner.run(models, backfill, "full_refresh")
+    (res,) = runner.run(models, tick, "incremental")
+
+    day = K._fact_kin_transaction(spark, sf_dir, tick).filter(
+        F.col("date_key") == F.lit(backfill)
+    )
+    assert res.action == "incremental"
+    assert res.rows_written == day.count() > 0
+    stored = cat.table("fact_kin_transaction")
+    assert stored.filter(F.col("date_key") == F.lit(backfill)).count() == res.rows_written
+    key = (spark.sparkContext.applicationId, "fact_kin_transaction", sf_dir, str(tick))
+    assert not src._FRAME_CACHE[key].is_cached
