@@ -3997,8 +3997,15 @@ def _kin_ivm_dag_fixture(spark: SparkSession, sf_dir: str) -> dict:
     )
     from kin_data_pipeline_spark.plans.engine import Catalog, Runner
 
+    from kin_data_pipeline_spark.sources.catalog import frame_cache_unrecorded
+
     k = (spark.sparkContext.applicationId, sf_dir)
-    with _TT_LOCK:
+    # the kin builders request substrate frames during the build; keep them
+    # out of the calling query's recorded inventory so its plan fingerprint
+    # is the same whether this call BUILT the fixture or found it cached
+    # (substrates are a build-time dependency here, not part of the served
+    # plan — otherwise PLAN_MANIFEST hashes are first-toucher-bimodal)
+    with _TT_LOCK, frame_cache_unrecorded():
         if k in _KIN_IVM_CACHE:
             return _KIN_IVM_CACHE[k]
         cat = Catalog(spark, tempfile.mkdtemp(prefix="kindag_wh_"))
@@ -4038,14 +4045,6 @@ def _kin_ivm_dag_fixture(spark: SparkSession, sf_dir: str) -> dict:
         )
         subset = [x for x in models if x.name != "dim_kin_app"]
         acts.append({r.model: r.action for r in runner.run(subset, RUN_DATE)})
-        # the kin builders registered substrate frames during the build;
-        # drop them so the query's plan fingerprint is the same whether
-        # this call BUILT the fixture or found it cached (substrates are
-        # a build-time dependency here, not part of the served plan —
-        # without this, PLAN_MANIFEST hashes are first-toucher-bimodal)
-        from kin_data_pipeline_spark.sources.catalog import frame_cache_clear
-
-        frame_cache_clear(spark)
         if not _TT_DIRS:
             atexit.register(_tt_sweep)
         _TT_DIRS.append(cat.warehouse_dir)

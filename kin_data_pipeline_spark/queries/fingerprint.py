@@ -14,9 +14,9 @@ Hashing rules:
 - The hash covers the query DataFrame's ANALYZED logical plan plus the
   pre-truncation plans of every shared substrate frame the query's build
   registered (``truncate=True`` substrates appear downstream as LogicalRDD
-  leaves, which would otherwise hide substrate logic changes). The frame
-  cache is cleared before each query's build so the substrate inventory is
-  per-query, not first-toucher-order.
+  leaves, which would otherwise hide substrate logic changes). The
+  substrate inventory is recorded per query build, a registry hit
+  included, so it does not depend on which query built a substrate first.
 - Plan strings are normalized: expression IDs (``#123``), object addresses,
   RDD ids and Python-object reprs vary per session and are stripped; what
   remains is the operator tree, column names, types, and literals.
@@ -29,10 +29,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kin_data_pipeline_spark.sources.catalog import (
-    frame_cache_clear,
-    frame_cache_source_frames,
-)
+from kin_data_pipeline_spark.sources.catalog import frame_cache_record
 
 MANIFEST_PATH = "PLAN_MANIFEST.json"
 
@@ -126,15 +123,16 @@ def oracle_fingerprint(sql: str | None) -> str:
 def query_fingerprint(spark: SparkSession, fn, sf_dir: str) -> str:
     """Normalized semantic hash of one registered query at ``sf_dir``.
 
-    Clears the substrate frame cache first so every substrate the query
-    depends on is (re)built and captured; the hash is over the query's own
-    analyzed plan plus each substrate's pre-truncation analyzed plan,
-    keyed by substrate name so renames register as changes.
+    Records every substrate the query's build requests, with the
+    substrates those depend on, whether the registry already held them or
+    not; the hash is over the query's own analyzed plan plus each
+    substrate's pre-truncation analyzed plan, keyed by substrate name so
+    renames register as changes.
     """
-    frame_cache_clear(spark)
-    df = fn(spark, sf_dir)
+    with frame_cache_record(spark) as substrates:
+        df = fn(spark, sf_dir)
     parts = ["query:" + normalize_plan(_analyzed(df))]
-    for name, sub in sorted(frame_cache_source_frames(spark).items()):
+    for name, sub in sorted(substrates.items()):
         parts.append(f"substrate {name}:" + normalize_plan(_analyzed(sub)))
     digest = hashlib.sha256("\n".join(parts).encode()).hexdigest()
     return digest[:16]

@@ -10,6 +10,8 @@ partition pruning on the date key; the API here is layout-agnostic.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +56,13 @@ def _timestamp_cols(path: str) -> tuple[list[str], list[str]]:
     ]
     return nanos, naive
 
+# Each file's timestamp classes and Spark-inferred schema, keyed by (app,
+# path, mtime, size). Without a schema `spark.read.parquet` runs a
+# footer-reading Spark job on every call, and query builders load the same
+# few tables hundreds of times per session; the file's own identity in the
+# key means a rewritten file is re-inferred.
+_READ_SCHEMAS: dict[tuple, tuple] = {}
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table. Lazy: no action is triggered.
 
@@ -65,10 +74,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # session-TZ-dependent and the oracle (DuckDB) is UTC-naive.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols, ntz_cols = _timestamp_cols(path)
+    st = os.stat(path)
+    k = (spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size)
+    ns_cols, ntz_cols, schema = _READ_SCHEMAS.get(k) or (*_timestamp_cols(path), None)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _READ_SCHEMAS[k] = (ns_cols, ntz_cols, df.schema)
+    else:
+        df = spark.read.schema(schema).parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     for c in ntz_cols:
@@ -94,7 +109,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # Keyed by Spark application id so a fresh session never sees stale frames.
 
 _FRAME_CACHE: dict[tuple, DataFrame] = {}
-_FRAME_CACHE_LOCK = __import__("threading").RLock()
+_FRAME_CACHE_LOCK = threading.RLock()
 
 def frame_cache_names(spark: SparkSession) -> set:
     """Names of the substrate frames registered for this Spark app — a
@@ -110,18 +125,10 @@ def frame_cache_names(spark: SparkSession) -> set:
 # blind to changes in the substrate's own logic without this side record.
 _FRAME_SOURCE_FRAMES: dict[tuple, DataFrame] = {}
 
-def frame_cache_source_frames(spark: SparkSession) -> dict:
-    """name -> the substrate DataFrame as built (BEFORE cache/checkpoint
-    wrapping), for this Spark app."""
-    app_id = spark.sparkContext.applicationId
-    with _FRAME_CACHE_LOCK:
-        return {k[1]: df for k, df in _FRAME_SOURCE_FRAMES.items() if k[0] == app_id}
-
 def frame_cache_clear(spark: SparkSession) -> None:
-    """Drop this app's substrate registry (fingerprinting only: forces the
-    next query build to re-register every substrate it depends on, so the
-    dependency inventory is per-query instead of first-toucher-order) and
-    unpersist the cached frames it drops, so none stays pinned."""
+    """Drop this app's substrate registry and unpersist the cached frames
+    it drops, so none stays pinned: the next request for any key builds it
+    anew."""
     app_id = spark.sparkContext.applicationId
     with _FRAME_CACHE_LOCK:
         for k in [k for k in _FRAME_CACHE if k[0] == app_id]:
@@ -130,6 +137,64 @@ def frame_cache_clear(spark: SparkSession) -> None:
                 df.unpersist()
         for k in [k for k in _FRAME_SOURCE_FRAMES if k[0] == app_id]:
             del _FRAME_SOURCE_FRAMES[k]
+            _FRAME_DEPS.pop(k, None)
+
+# Which substrates a query build depends on, for the plan fingerprint
+# (queries/fingerprint.py), without clearing the registry: each key records
+# the keys its own build requested, so a request that hits the registry
+# still reports the key's whole dependency chain. Per thread: a concurrent
+# build's requests never land in another thread's record.
+_FRAME_DEPS: dict[tuple, tuple] = {}
+_FRAME_TRACE = threading.local()
+
+def _trace() -> threading.local:
+    if not hasattr(_FRAME_TRACE, "builds"):
+        _FRAME_TRACE.builds = []  # dep lists of the builds in progress
+        _FRAME_TRACE.records = []  # open frame_cache_record() dicts
+    return _FRAME_TRACE
+
+def _note(record: dict, k: tuple) -> None:
+    # dependencies first, each key once: the order a build from an empty
+    # registry would register them in
+    if k not in record:
+        for d in _FRAME_DEPS.get(k, ()):
+            _note(record, d)
+        record[k] = None
+
+@contextmanager
+def frame_cache_record(spark: SparkSession):
+    """Yield a dict that, once the block exits, maps the name of every
+    substrate the block requested (directly or through another substrate's
+    build, registered before or during the block) to the DataFrame as built
+    (BEFORE cache/checkpoint wrapping)."""
+    out: dict = {}
+    record: dict = {}
+    trace = _trace()
+    trace.records.append(record)
+    try:
+        yield out
+    finally:
+        trace.records.pop()  # records nest, innermost first
+        with _FRAME_CACHE_LOCK:
+            out.update(
+                (k[1], _FRAME_SOURCE_FRAMES[k])
+                for k in record
+                if k in _FRAME_SOURCE_FRAMES
+            )
+
+@contextmanager
+def frame_cache_unrecorded():
+    """Hide the block's substrate requests from open records and from the
+    dependencies of an enclosing build: for a fixture a query builds once
+    and then serves from its own cache, so the query's recorded inventory
+    does not depend on which call built the fixture."""
+    trace = _trace()
+    saved = trace.builds, trace.records
+    trace.builds, trace.records = [], []
+    try:
+        yield
+    finally:
+        trace.builds, trace.records = saved
 
 def frame_cached(
     spark: SparkSession, name: str, *key, build, truncate: bool = False
@@ -161,6 +226,9 @@ def frame_cached(
     could demote a broadcast. Lazy (``eager=False``): the first toucher
     pays materialization, same billing as the cache path."""
     k = (spark.sparkContext.applicationId, name, *key)
+    trace = _trace()
+    if trace.builds:
+        trace.builds[-1].append(k)
     with _FRAME_CACHE_LOCK:
         if k not in _FRAME_CACHE:
             # purge entries from STOPPED applications on insert: stale appId
@@ -171,7 +239,12 @@ def frame_cached(
             for sk in stale:
                 del _FRAME_CACHE[sk]
                 _FRAME_SOURCE_FRAMES.pop(sk, None)
-            built = build()
+                _FRAME_DEPS.pop(sk, None)
+            trace.builds.append([])
+            try:
+                built = build()
+            finally:
+                _FRAME_DEPS[k] = tuple(trace.builds.pop())
             _FRAME_SOURCE_FRAMES[k] = built
             if truncate:
                 built = built.localCheckpoint(eager=False)
@@ -180,6 +253,8 @@ def frame_cached(
             _FRAME_CACHE[k] = built
         elif not truncate and not _FRAME_CACHE[k].is_cached:
             _FRAME_CACHE[k].cache()  # a second consumer: now worth keeping
+        for record in trace.records:
+            _note(record, k)
         return _FRAME_CACHE[k]
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
