@@ -32,78 +32,71 @@ import kin_data_pipeline_spark.queries.tpch_partsupp  # noqa: F401,E402
 # NEXT_WINDOW_BACKLOG each round — the invariants in
 # tests/test_registry_window.py key off CORRECTNESS-file discovery, so the
 # round prep is a data change only.
-ROUND = 12
+ROUND = 13
 
-# Round-12 window (recomposed after the optimization-round lifecycle work
-# re-planned 6 queries — the 3 cdf_* reads and the 3 time_travel_* reads,
-# whose change-file / snapshot layouts moved to the single-pass
-# delete_by_keys + staged-append commits; PLAN_MANIFEST since=12 discounts
-# their old green rows): all 6 never-green queries lead, then padding
+# Round-13 window: the 4 never-green queries lead — the dedup queries whose
+# PLAN_MANIFEST since moved to 12 once the manifest was generated under the
+# test session (round 12's dedup plans pin their repartition to its cores)
+# and which have no green round-12 CORRECTNESS row — then padding
 # oldest-green-first per scripts/compose_window.py.
 CURRENT_WINDOW_HEAD = [
-    "cdf_incremental_aggregate",
-    "cdf_incremental_distinct_count",
-    "cdf_incremental_minmax",
-    "time_travel_as_of_timestamps",
-    "time_travel_changes",
-    "time_travel_orders_versions",
-    "kin_app_txn_summary_from_account_monthly",
-    "kin_app_txn_summary_from_account_weekly",
-    "kin_app_txn_summary_to_account_monthly",
-    "kin_app_txn_summary_to_account_weekly",
-    "kin_daily_account_creates_by_close_authority",
-    "kin_daily_account_creates_by_program",
-    "kin_daily_account_creates_by_type",
-    "kin_daily_account_summary_by_app",
-    "kin_daily_account_summary_ecosystem",
-    "knn_label_agreement",
-    "local_supplier_revenue_q5",
-    "media_decoded_stats",
-    "media_metadata_stats",
-    "monthly_priority_pivot",
-    "near_dup_clusters",
-    "near_dup_clusters_deep",
-    "ngram_jaccard_capped",
-    "ngram_jaccard_near_dups",
-    "order_value_deciles",
-    "progressive_jpeg_pixel_stats",
-    "redaction_stats_props",
-    "regex_token_stats",
-    "region_segment_grouping_sets",
-    "repeated_chunk_stats",
-    "revenue_rollup_region_nation",
-    "rolling_hash_fingerprints",
-    "semantic_dedup_pairs",
-    "semantic_dedup_survivor_stats",
-    "shingle_containment_pairs",
-    "shipping_priority_q3",
-    "simhash_near_dups",
-    "skew_distinct_users_by_event_type",
-    "skew_salted_value_sum_by_type",
-    "streaming_daily_rollup",
-    "trailing_7d_revenue",
-    "bpe_train_merges",
-    "cross_source_dup_matrix",
-    "customer_order_distribution_q13",
-    "daily_event_segments",
-    "daily_order_revenue",
-    "day_over_day_revenue",
-    "dominant_part_suppliers_q20",
-    "dsir_importance_scores",
-    "embedding_cell_outliers",
-]
-
-# Queries registered after the current window filled go here at registration
-# time (test-enforced, round-agnostic rule in tests/test_registry_window.py)
-# and must lead the next round's window. The four below were re-planned by
-# round 12's dedup repartition pins (PLAN_MANIFEST since=12) and have no
-# green round-12 CORRECTNESS row, so they must be verified again next round.
-NEXT_WINDOW_BACKLOG: list[str] = [
     "curated_corpus_stats",
     "dedup_keep_best_survivors",
     "dedup_survivor_stats",
     "ngram_jaccard_prefix_filtered",
+    "entity_role_activity",
+    "important_part_values_q11",
+    "kin_daily_creations_by_app",
+    "kin_daily_volatility_factor",
+    "kin_fact_creations",
+    "large_volume_customers_q18",
+    "late_shipment_priority_q12",
+    "length_distribution_ks",
+    "line_dedup_retention",
+    "lineitems_of_big_orders",
+    "min_cost_part_suppliers_q2",
+    "nation_profit_q9",
+    "national_market_share_q8",
+    "part_supplier_counts_q16",
+    "priority_late_orders_q4",
+    "promo_revenue_share_q14",
+    "returned_item_customers_q10",
+    "sa_progressive_jpeg_pixel_stats",
+    "sole_late_supplier_q21",
+    "source_cap_sample",
+    "source_mix_resample",
+    "stratified_sample_split",
+    "streaming_dedup_within_watermark",
+    "streaming_feed_dedup",
+    "streaming_purchase_view_join",
+    "streaming_running_balance",
+    "streaming_table_changes",
+    "streaming_user_sessions",
+    "time_travel_restore",
+    "token_budget_selection",
+    "token_rarity_scores",
+    "top_supplier_revenue_q15",
+    "training_shard_manifest",
+    "url_domain_filter_stats",
+    "user_sessions_batch",
+    "winnowing_fingerprints",
+    "ycbcr420_jpeg_pixel_stats",
+    "acctbal_opportunity_q22",
+    "approx_daily_active_users",
+    "approx_length_percentiles",
+    "bm25_doc_scores",
+    "bpe_pair_frequencies",
+    "cdc_chunk_dedup_stats",
+    "closing_value_per_user_day",
+    "countmin_token_estimates",
+    "customers_without_orders",
 ]
+
+# Queries registered after the current window filled go here at registration
+# time (test-enforced, round-agnostic rule in tests/test_registry_window.py)
+# and must lead the next round's window. Empty for round 13: the whole
+# round-12 backlog fits in the round-13 window above.
+NEXT_WINDOW_BACKLOG: list[str] = []
 
 def _ordered() -> dict[str, QuerySpec]:
     out = {n: QUERIES[n] for n in CURRENT_WINDOW_HEAD if n in QUERIES}
