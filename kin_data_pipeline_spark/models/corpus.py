@@ -27,7 +27,16 @@ operator's own bounded shuffles (capped-postings pairs, O(log n) star
 rounds, one hash agg); stages re-read STORED parquet rather than
 re-deriving the full lineage, which is exactly the
 materialize-per-stage contract a 100 TB curation run needs (re-running
-stage 3 must not re-shingle the corpus).
+stage 3 must not re-shingle the corpus). Within the survivor stage the
+shingle → posting → pair lineage is linear in document length
+(``operators.dedup.shingles`` splits a document once per evaluation, not
+once per window), and its postings take the size and explode of a
+shingle column rather than of the shingle expression. That lineage is
+evaluated once, into the connected-components checkpoint; the stage's
+write reads only the checkpoint. Within that one evaluation each shingle
+array is still built twice: Spark infers a ``size(sh) > 0`` filter for
+the postings ``explode`` and inlines it below the Project that builds
+``sh``.
 """
 
 from __future__ import annotations
@@ -38,6 +47,9 @@ from kin_data_pipeline_spark.operators.dedup import (
     CHUNK_W,
     chunk_hashes,
     connected_components_star,
+    grouped_posting_lists,
+    jaccard_pairs_from_lists,
+    shingle_postings,
 )
 from kin_data_pipeline_spark.operators.shards import shard_assignment
 from kin_data_pipeline_spark.plans.checks import in_range, non_negative, not_null, unique
@@ -61,8 +73,6 @@ def _quality(ctx, sf_dir: str) -> DataFrame:
     return q.filter(F.col("n_tokens") >= MIN_TOKENS)
 
 def _survivors(ctx) -> DataFrame:
-    from kin_data_pipeline_spark.operators.dedup import jaccard_pairs_from_lists
-    from kin_data_pipeline_spark.operators.dedup import grouped_posting_lists
     from kin_data_pipeline_spark.queries.llmops import (
         JACCARD_DF_CAP,
         JACCARD_THRESHOLD,
@@ -70,14 +80,11 @@ def _survivors(ctx) -> DataFrame:
     )
 
     q = ctx.table("corpus_quality")
-    # the ONE short-doc-safe shingle expression (operators.dedup.shingles)
-    # instead of a third local copy of the higher-order-function block
-    from kin_data_pipeline_spark.operators.dedup import shingles as _shingles
-
-    shingles = _shingles(F.col("text"), SHINGLE_K)
-    postings = q.select(
-        "doc_id", F.size(shingles).alias("n_sh"), F.explode(shingles).alias("s")
-    )
+    # shingle_postings materializes each doc's shingle array as a column
+    # before taking its size and exploding it: a size(shingles(...)) beside
+    # explode(shingles(...)) lands in the Project ABOVE the Generate and
+    # rebuilds the whole array once per posting
+    postings = shingle_postings(q, "doc_id", "text", SHINGLE_K)
     pairs = jaccard_pairs_from_lists(
         grouped_posting_lists(postings),
         threshold=JACCARD_THRESHOLD,

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kin_data_pipeline_spark.sources.catalog import frame_lineage
+
 def fingerprint(col: Column | str, normalize: bool = True) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     if normalize:
@@ -36,19 +38,27 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 def shingles(col: Column | str, k: int = 3) -> Column:
     """Distinct k-word shingles via JVM higher-order functions (no UDF).
 
+    Linear in document length: each evaluation splits the text once into a
+    token array ``w``, and the ``size(w) - k + 1`` windows are zipped from ``k``
+    shifted slices of it (``slice(w, j + 1, size(w) - k + 1)`` for j < k).
+    No lambda body references the split — Catalyst does not share an
+    outer expression into a ``lambdafunction``, so a per-window
+    ``slice(split(text), i, k)`` re-splits the whole document once per
+    window, quadratic in its length.
+
     Documents with fewer than ``k`` words yield an EMPTY array — the same
     semantics as the DuckDB oracles' ``range(1, len - k + 2)`` (empty when
-    start > stop). Without the guard, ``sequence(0, size - k)`` generates a
-    DESCENDING sequence through index 0 and ``slice`` aborts the job
-    (SQL array indices start at 1).
+    start > stop). Without the guard the slice length goes negative and
+    ``slice`` aborts the job.
     """
     w = F.split(F.trim(F.col(col) if isinstance(col, str) else col), " ")
+    n = F.size(w) - k + 1
+    windows = F.arrays_zip(*[F.slice(w, j + 1, n) for j in range(k)])
     return F.when(
         F.size(w) >= k,
         F.array_distinct(
             F.transform(
-                F.sequence(F.lit(0), F.size(w) - k),
-                lambda i: F.concat_ws(" ", F.slice(w, i + 1, k)),
+                windows, lambda t: F.concat_ws(" ", *[t[str(j)] for j in range(k)])
             )
         ),
     ).otherwise(F.array().cast("array<string>"))
@@ -690,10 +700,37 @@ def _small_star(edges: DataFrame) -> DataFrame:
         .distinct()
     )
 
-def _star_contraction(
-    edges: DataFrame, a_col: str, b_col: str, max_iters: int
-) -> tuple[DataFrame, int]:
-    """Alternate large-star/small-star to the star-forest fixpoint.
+def _canonical_edges(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """The distinct ``(lo, hi)`` edge set, self-loops kept, behind ONE
+    eager checkpoint: the single evaluation of the caller's edge lineage
+    (for near-dup pairs, the whole shingle → posting → pair expansion).
+    The contraction input and the self-loop nodes both derive from it, so
+    nothing downstream reads ``edges`` again. Rows with a null endpoint are
+    dropped: ``least``/``greatest`` skip nulls and would turn them into
+    self-loops.
+
+    The checkpoint hides ``edges`` and the contraction from every plan
+    built on it, so one contraction round over the un-checkpointed edges is
+    recorded for the plan fingerprint (``frame_lineage``): a change to the
+    caller's edges, to their canonical form or to ``_large_star`` /
+    ``_small_star`` still changes the fingerprint of the query."""
+    canon = (
+        edges.filter(F.col(a_col).isNotNull() & F.col(b_col).isNotNull())
+        .select(
+            F.least(a_col, b_col).alias("lo"), F.greatest(a_col, b_col).alias("hi")
+        )
+        .distinct()
+    )
+    frame_lineage(
+        edges.sparkSession,
+        "star_contraction",
+        lambda: _small_star(_large_star(canon.filter(F.col("lo") != F.col("hi")))),
+    )
+    return canon.localCheckpoint(eager=True)
+
+def _star_contraction(canon: DataFrame, max_iters: int) -> tuple[DataFrame, int]:
+    """Alternate large-star/small-star to the star-forest fixpoint over
+    ``_canonical_edges`` output (self-loops are dropped here).
 
     Returns (star_edges, rounds). Convergence is a direct star-forest
     property probe — the lo (root) and hi (member) node sets are disjoint
@@ -703,14 +740,7 @@ def _star_contraction(
     One 1-row aggregate per round, the same aggregated-probe class as
     label propagation's early exit.
     """
-    e = (
-        edges.filter(F.col(a_col) != F.col(b_col))
-        .select(
-            F.least(a_col, b_col).alias("lo"), F.greatest(a_col, b_col).alias("hi")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = canon.filter(F.col("lo") != F.col("hi"))
     rounds = 0
     for _ in range(max_iters):
         # lazy checkpoint — the convergence aggregate is the first action,
@@ -758,8 +788,13 @@ def connected_components_star(
     O(diameter). Prefer this form when the duplicate graph's shape is
     unknown (open-web corpora produce adversarial chains through
     boilerplate overlap).
+
+    ``edges`` is evaluated once, by the eager ``_canonical_edges``
+    checkpoint; the returned frame's plan reads only checkpoints, so a
+    caller that writes it does not re-run the edge lineage.
     """
-    stars, _ = _star_contraction(edges, a_col, b_col, max_iters)
+    canon = _canonical_edges(edges, a_col, b_col)
+    stars, _ = _star_contraction(canon, max_iters)
     # Fixpoint is a star forest: every edge is (component_min, node).
     members = stars.select(F.col("hi").alias("node"), F.col("lo").alias("cluster_id"))
     roots = stars.select(
@@ -770,11 +805,11 @@ def connected_components_star(
     # still "incident to an edge" and labels itself. The contraction filters
     # self-loops, so re-attach such nodes as singleton roots — anti-joined
     # against the labeled set, because a node with BOTH a self-loop and a
-    # real edge already carries its component label.
+    # real edge already carries its component label. Read from the same
+    # checkpoint as the contraction (already distinct), never from ``edges``.
     loops = (
-        edges.filter(F.col(a_col) == F.col(b_col))
-        .select(F.col(a_col).alias("node"), F.col(a_col).alias("cluster_id"))
-        .distinct()
+        canon.filter(F.col("lo") == F.col("hi"))
+        .select(F.col("lo").alias("node"), F.col("lo").alias("cluster_id"))
         .join(labeled.select("node"), "node", "left_anti")
     )
     return labeled.unionByName(loops)

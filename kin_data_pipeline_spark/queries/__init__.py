@@ -34,15 +34,17 @@ import kin_data_pipeline_spark.queries.tpch_partsupp  # noqa: F401,E402
 # round prep is a data change only.
 ROUND = 13
 
-# Round-13 window: the 4 never-green queries lead — the dedup queries whose
-# PLAN_MANIFEST since moved to 12 once the manifest was generated under the
-# test session (round 12's dedup plans pin their repartition to its cores)
-# and which have no green round-12 CORRECTNESS row — then padding
-# oldest-green-first per scripts/compose_window.py.
+# Round-13 window: the 6 never-green queries lead — the 5 near-dup queries
+# whose PLAN_MANIFEST since moved to 13 when operators.dedup began shingling
+# each document in linear time and reading the pair lineage once, plus
+# ngram_jaccard_prefix_filtered (since 12, no green round-12 CORRECTNESS
+# row) — then padding oldest-green-first per scripts/compose_window.py.
 CURRENT_WINDOW_HEAD = [
     "curated_corpus_stats",
     "dedup_keep_best_survivors",
     "dedup_survivor_stats",
+    "near_dup_clusters",
+    "near_dup_clusters_deep",
     "ngram_jaccard_prefix_filtered",
     "entity_role_activity",
     "important_part_values_q11",
@@ -88,8 +90,6 @@ CURRENT_WINDOW_HEAD = [
     "bpe_pair_frequencies",
     "cdc_chunk_dedup_stats",
     "closing_value_per_user_day",
-    "countmin_token_estimates",
-    "customers_without_orders",
 ]
 
 # Queries registered after the current window filled go here at registration

@@ -17,6 +17,9 @@ Hashing rules:
   leaves, which would otherwise hide substrate logic changes). The
   substrate inventory is recorded per query build, a registry hit
   included, so it does not depend on which query built a substrate first.
+  Operators that checkpoint mid-computation (``connected_components_star``)
+  register the plan the checkpoint hides the same way
+  (``sources.catalog.frame_lineage``).
 - Plan strings are normalized: expression IDs (``#123``), object addresses,
   RDD ids and Python-object reprs vary per session and are stripped; what
   remains is the operator tree, column names, types, and literals.
@@ -68,6 +71,12 @@ def normalize_plan(text: str) -> str:
 
 def _analyzed(df: DataFrame) -> str:
     return df._jdf.queryExecution().analyzed().toString()
+
+
+def plan_digest(df: DataFrame) -> str:
+    """Short hash of ``df``'s normalized analyzed plan: equal across
+    sessions for the same logic, so it can name a frame in the hash."""
+    return hashlib.sha256(normalize_plan(_analyzed(df)).encode()).hexdigest()[:16]
 
 
 #: bump when the normalization below changes semantics — the manifest

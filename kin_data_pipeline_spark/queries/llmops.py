@@ -84,7 +84,13 @@ def _cached_substrate(spark, sf_dir: str, kind: str, build) -> DataFrame:
     # Same reentrant guard as sources.catalog.frame_cached: concurrent
     # threads (Runner.run_concurrent, threaded query evaluation) must not
     # double-build the most expensive shared frames.
-    from kin_data_pipeline_spark.sources.catalog import _FRAME_CACHE_LOCK
+    # Requests are traced like frame_cached's, so a registry hit still
+    # reports the plans its build recorded (the checkpointed star-contraction
+    # edges of near_dup_labels) to the plan fingerprint.
+    from kin_data_pipeline_spark.sources.catalog import (
+        _FRAME_CACHE_LOCK,
+        traced_request,
+    )
 
     key = (spark.sparkContext.applicationId, sf_dir, kind)
     with _FRAME_CACHE_LOCK:
@@ -94,7 +100,9 @@ def _cached_substrate(spark, sf_dir: str, kind: str, build) -> DataFrame:
             # their frames for the process lifetime
             for sk in [k for k in _SUBSTRATE_CACHE if k[0] != key[0]]:
                 del _SUBSTRATE_CACHE[sk]
-            _SUBSTRATE_CACHE[key] = build().cache()
+            _SUBSTRATE_CACHE[key] = traced_request(key, build).cache()
+        else:
+            traced_request(key)
         return _SUBSTRATE_CACHE[key]
 
 def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -128,15 +128,15 @@ _FRAME_SOURCE_FRAMES: dict[tuple, DataFrame] = {}
 def frame_cache_clear(spark: SparkSession) -> None:
     """Drop this app's substrate registry and unpersist the cached frames
     it drops, so none stays pinned: the next request for any key builds it
-    anew."""
+    anew. Plans registered by ``frame_lineage`` stay: a frame cached
+    outside the registry may still depend on them."""
     app_id = spark.sparkContext.applicationId
     with _FRAME_CACHE_LOCK:
         for k in [k for k in _FRAME_CACHE if k[0] == app_id]:
             df = _FRAME_CACHE.pop(k)
             if df.is_cached:
                 df.unpersist()
-        for k in [k for k in _FRAME_SOURCE_FRAMES if k[0] == app_id]:
-            del _FRAME_SOURCE_FRAMES[k]
+            _FRAME_SOURCE_FRAMES.pop(k, None)
             _FRAME_DEPS.pop(k, None)
 
 # Which substrates a query build depends on, for the plan fingerprint
@@ -196,6 +196,17 @@ def frame_cache_unrecorded():
     finally:
         trace.builds, trace.records = saved
 
+def _purge_stopped_apps(app_id: str) -> None:
+    # purge entries from STOPPED applications on insert: stale appId keys
+    # are unreachable forever (the key embeds the appId) but would pin their
+    # DataFrames + dead-JVM references for the process lifetime in a
+    # long-lived host (test suite, notebook). Caller holds the lock.
+    keys = {*_FRAME_CACHE, *_FRAME_SOURCE_FRAMES, *_FRAME_DEPS}
+    for sk in [sk for sk in keys if sk[0] != app_id]:
+        _FRAME_CACHE.pop(sk, None)
+        _FRAME_SOURCE_FRAMES.pop(sk, None)
+        _FRAME_DEPS.pop(sk, None)
+
 def frame_cached(
     spark: SparkSession, name: str, *key, build, truncate: bool = False
 ) -> DataFrame:
@@ -226,36 +237,76 @@ def frame_cached(
     could demote a broadcast. Lazy (``eager=False``): the first toucher
     pays materialization, same billing as the cache path."""
     k = (spark.sparkContext.applicationId, name, *key)
-    trace = _trace()
-    if trace.builds:
-        trace.builds[-1].append(k)
     with _FRAME_CACHE_LOCK:
         if k not in _FRAME_CACHE:
-            # purge entries from STOPPED applications on insert: stale appId
-            # keys are unreachable forever (the key embeds the appId) but
-            # would pin their DataFrames + dead-JVM references for the
-            # process lifetime in a long-lived host (test suite, notebook)
-            stale = [sk for sk in _FRAME_CACHE if sk[0] != k[0]]
-            for sk in stale:
-                del _FRAME_CACHE[sk]
-                _FRAME_SOURCE_FRAMES.pop(sk, None)
-                _FRAME_DEPS.pop(sk, None)
-            trace.builds.append([])
-            try:
-                built = build()
-            finally:
-                _FRAME_DEPS[k] = tuple(trace.builds.pop())
+            _purge_stopped_apps(k[0])
+            built = traced_request(k, build)
             _FRAME_SOURCE_FRAMES[k] = built
             if truncate:
                 built = built.localCheckpoint(eager=False)
             elif not built._jdf.queryExecution().analyzed().deterministic():
                 built.cache()
             _FRAME_CACHE[k] = built
-        elif not truncate and not _FRAME_CACHE[k].is_cached:
-            _FRAME_CACHE[k].cache()  # a second consumer: now worth keeping
+        else:
+            traced_request(k)
+            if not truncate and not _FRAME_CACHE[k].is_cached:
+                _FRAME_CACHE[k].cache()  # a second consumer: now worth keeping
+        return _FRAME_CACHE[k]
+
+def traced_request(k: tuple, build=None):
+    """Trace one request for the cached frame keyed ``k`` (``k[0]`` is the
+    app id) for the plan fingerprint: the enclosing build depends on ``k``,
+    and every open ``frame_cache_record`` notes ``k`` with its dependency
+    chain. On a miss, pass ``build``: it runs as ``k``'s build, so the keys
+    it requests become ``k``'s dependencies, and its frame is returned.
+
+    A cache kept outside this registry (``queries.llmops._cached_substrate``)
+    calls this too: its own frames are not named in a record, but what
+    their builds register (``frame_lineage``) is, on every later hit too."""
+    trace = _trace()
+    if trace.builds:
+        trace.builds[-1].append(k)
+    built = None
+    if build is not None:
+        trace.builds.append([])
+        try:
+            built = build()
+        finally:
+            _FRAME_DEPS[k] = tuple(trace.builds.pop())
+    for record in trace.records:
+        _note(record, k)
+    return built
+
+def frame_lineage(spark: SparkSession, name: str, build) -> None:
+    """Record, for the plan fingerprint, what a checkpoint is about to hide.
+
+    An operator that checkpoints its input mid-computation returns a frame
+    whose plan reads only LogicalRDD leaves: neither the caller's input nor
+    the operator's own logic before the checkpoint is in it. ``build()``
+    returns a frame over the un-checkpointed input that stands in for both.
+    It is registered like a substrate's pre-truncation plan, under ``name``
+    plus a hash of its normalized plan (so two operator calls in one build
+    never share a key): every open ``frame_cache_record`` reports it, and so
+    does a later registry hit on the substrate whose build made the call.
+    Outside any record or substrate build this is a no-op and ``build`` is
+    not called, so only fingerprinting and substrate builds pay for the
+    extra analysis."""
+    trace = _trace()
+    if not trace.builds and not trace.records:
+        return
+    # deferred: the fingerprint module imports this one
+    from kin_data_pipeline_spark.queries.fingerprint import plan_digest
+
+    df = build()
+    k = (spark.sparkContext.applicationId, f"{name} {plan_digest(df)}")
+    if trace.builds:
+        trace.builds[-1].append(k)
+    with _FRAME_CACHE_LOCK:
+        if k not in _FRAME_SOURCE_FRAMES:
+            _purge_stopped_apps(k[0])
+            _FRAME_SOURCE_FRAMES[k] = df
         for record in trace.records:
             _note(record, k)
-        return _FRAME_CACHE[k]
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}

@@ -3,7 +3,8 @@
     python scripts/gen_queries_md.py
 
 `tests/test_registry_window.py::test_queries_md_matches_registry` fails
-when the index drifts from the registry; run this to bring it back.
+when the committed index differs from ``render()`` — a registry change, a
+round bump or a recomposed window; run this to bring it back.
 """
 
 from __future__ import annotations
@@ -14,7 +15,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-def main() -> None:
+def render() -> str:
+    """The QUERIES.md text for the current registry, round and window."""
     from kin_data_pipeline_spark.queries import CURRENT_WINDOW_HEAD, QUERIES, ROUND
 
     n_oracles = sum(1 for s in QUERIES.values() if s.oracle)
@@ -44,8 +46,13 @@ def main() -> None:
         mark = "w" if n in win else ""
         doc = (s.doc or "").replace("|", "\\|")
         lines.append(f"| `{n}` | {mark} | {doc} |")
+    return "\n".join(lines) + "\n"
+
+def main() -> None:
+    from kin_data_pipeline_spark.queries import QUERIES
+
     with open(os.path.join(REPO, "QUERIES.md"), "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+        fh.write(render())
     print(f"wrote QUERIES.md with {len(QUERIES)} queries")
 
 if __name__ == "__main__":

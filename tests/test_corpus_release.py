@@ -254,3 +254,59 @@ def test_clean_stage_removes_all_copies_of_a_shared_chunk(spark, sf_dir, tmp_pat
     # within-document repeat is NOT cross-document: both copies stay
     assert out[3]["text"].split(" ").count("r0") == 2
     assert out[3]["n_dropped_chunks"] == 0
+
+
+def _survivors_frame(release, monkeypatch):
+    """Build corpus_survivors over the stored quality table, capturing the
+    near-dup pair frame handed to the connected-components operator."""
+    from kin_data_pipeline_spark.models import corpus
+    from kin_data_pipeline_spark.plans.engine import BuildContext
+
+    seen = {}
+    cc = corpus.connected_components_star
+
+    def spy(edges, *args, **kwargs):
+        seen["pairs"] = edges
+        return cc(edges, *args, **kwargs)
+
+    monkeypatch.setattr(corpus, "connected_components_star", spy)
+    df = corpus._survivors(BuildContext(release.spark, release, RUN))
+    return df, seen["pairs"]
+
+
+def _parent_of(lines: list[str], i: int) -> str | None:
+    """The line of plan-tree node ``i``'s parent in a ``treeString``."""
+
+    def depth(line: str) -> int:
+        m = re.search(r"[+:]- ", line)
+        return m.end() if m else 0
+
+    d = depth(lines[i])
+    for j in range(i - 1, -1, -1):
+        if depth(lines[j]) < d:
+            return lines[j]
+    return None
+
+
+def test_survivor_postings_size_reads_the_materialized_array(release, monkeypatch):
+    """The Project above each Generate of the pair lineage evaluates no
+    higher-order function: the postings' size(...) reads the shingle
+    column, it does not rebuild the array once per posting."""
+    _, pairs = _survivors_frame(release, monkeypatch)
+    lines = pairs._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    gens = [i for i, line in enumerate(lines) if "Generate " in line]
+    assert len(gens) == 2, "\n".join(lines)  # postings explode, pair expansion
+    for i in gens:
+        parent = _parent_of(lines, i)
+        assert parent is not None and "transform(" not in parent, parent
+
+
+def test_survivors_plan_reads_pair_lineage_only_through_checkpoint(
+    release, monkeypatch
+):
+    """The written corpus_survivors frame holds no Generate: the pair
+    lineage is evaluated once, into the connected-components checkpoint,
+    and the write reads only that checkpoint."""
+    df, _ = _survivors_frame(release, monkeypatch)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Generate" not in plan, plan

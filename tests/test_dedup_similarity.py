@@ -198,6 +198,7 @@ def test_star_contraction_logarithmic_rounds_on_path(spark, sf_dir):
     import math
 
     from kin_data_pipeline_spark.operators.dedup import (
+        _canonical_edges,
         _star_contraction,
         connected_components_star,
     )
@@ -208,7 +209,9 @@ def test_star_contraction_logarithmic_rounds_on_path(spark, sf_dir):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], ["doc_a", "doc_b"]
     )
-    _, rounds = _star_contraction(edges, "doc_a", "doc_b", max_iters=40)
+    _, rounds = _star_contraction(
+        _canonical_edges(edges, "doc_a", "doc_b"), max_iters=40
+    )
     assert rounds <= 2 * math.ceil(math.log2(n + 1)), rounds
     labels = connected_components_star(edges)
     assert labels.select("cluster_id").distinct().count() == 1
@@ -331,6 +334,82 @@ def test_shingles_empty_for_sub_k_docs(spark):
     )
     got = df.select(shingles("text", 3).alias("sh")).collect()
     assert [r["sh"] for r in got] == [[], [], ["a b c", "b c d"]]
+
+
+def _oracle_shingles(text, k):
+    """Pure-Python model of the DuckDB oracles' ``_SQL_SHINGLES`` for any
+    k: words = string_split(trim(text), ' '); window i joins words[i..i+k-1]
+    for i in range(1, len - k + 2). Distinct in first-occurrence order (the
+    order Spark's array_distinct keeps). NULL text maps to the EMPTY array,
+    the Spark operator's contract."""
+    if text is None:
+        return []
+    w = text.strip(" ").split(" ")
+    return list(dict.fromkeys(" ".join(w[i : i + k]) for i in range(len(w) - k + 1)))
+
+
+_SHINGLE_EDGE_TEXTS = [
+    "",
+    None,
+    " ",
+    "one",
+    "two words",
+    "  leading spaces here",
+    "trailing spaces here   ",
+    "doubled  spaces   inside  here",
+    "x x x x x x x",
+    "a b c d e",
+]
+
+
+def test_shingles_match_oracle_reference(spark, sf_dir):
+    """shingles() equals the oracle's shingle definition for k in
+    {1, 2, 3, 5}, over the fixture corpus plus sub-k docs, leading,
+    trailing and doubled spaces, the empty string and NULL."""
+    from kin_data_pipeline_spark.operators.dedup import shingles
+
+    texts = [
+        r["text"] for r in load_table(spark, sf_dir, "documents").select("text").collect()
+    ] + _SHINGLE_EDGE_TEXTS
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
+    for k in (1, 2, 3, 5):
+        got = {
+            r["i"]: r["sh"]
+            for r in df.select("i", shingles("text", k).alias("sh")).collect()
+        }
+        for i, t in enumerate(texts):
+            assert got[i] == _oracle_shingles(t, k), (k, t)
+
+
+def _lambda_bodies(expr: str) -> list[str]:
+    """Every ``lambdafunction(...)`` argument list in an analyzed plan
+    string, matched by parenthesis depth."""
+    bodies, tag = [], "lambdafunction("
+    start = expr.find(tag)
+    while start >= 0:
+        i = start + len(tag)
+        depth = 1
+        while depth:
+            depth += {"(": 1, ")": -1}.get(expr[i], 0)
+            i += 1
+        bodies.append(expr[start + len(tag) : i - 1])
+        start = expr.find(tag, start + 1)
+    return bodies
+
+
+def test_shingles_lambda_never_resplits_text(spark):
+    """No lambda body of the shingle expression references the split:
+    Catalyst does not share an outer expression into a lambdafunction, so
+    a split inside one re-tokenizes the document once per window —
+    quadratic in its length."""
+    from kin_data_pipeline_spark.operators.dedup import shingles
+
+    df = spark.createDataFrame([("a b c d",)], "text string")
+    for k in (1, 2, 3, 5):
+        plan = df.select(shingles("text", k))._jdf.queryExecution().analyzed().toString()
+        bodies = _lambda_bodies(plan)
+        assert bodies, plan
+        assert not [b for b in bodies if "split(" in b], (k, bodies)
 
 
 def test_star_cc_labels_self_loop_only_nodes(spark):

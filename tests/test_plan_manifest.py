@@ -81,3 +81,44 @@ def test_fingerprints_match_manifest(spark):
         f"{len(stale)} fingerprints drifted from PLAN_MANIFEST.json — run "
         f"scripts/gen_plan_manifest.py and commit it: {sorted(stale)[:20]}"
     )
+
+
+def test_star_cc_fingerprint_sees_edges_and_contraction(spark, monkeypatch):
+    """connected_components_star evaluates its edges into a checkpoint, so
+    the frame it returns reads only LogicalRDD leaves. The fingerprint must
+    still move when the edges or the contraction change."""
+    from pyspark.sql import functions as F
+
+    from kin_data_pipeline_spark.operators import dedup
+
+    def chain(step):
+        def fn(spark, _sf_dir):
+            edges = spark.range(6).select(
+                F.col("id").alias("doc_a"), (F.col("id") + step).alias("doc_b")
+            )
+            return dedup.connected_components_star(edges)
+
+        return fn
+
+    base = query_fingerprint(spark, chain(1), SF_DIR)
+    assert base == query_fingerprint(spark, chain(1), SF_DIR)
+    assert base != query_fingerprint(spark, chain(2), SF_DIR)
+    large_star = dedup._large_star
+    monkeypatch.setattr(
+        dedup, "_large_star", lambda e: large_star(e).filter(F.col("hi") >= 0)
+    )
+    assert base != query_fingerprint(spark, chain(1), SF_DIR)
+
+
+def test_near_dup_cluster_queries_fingerprint_apart(spark):
+    """near_dup_clusters (the cached near_dup_labels substrate) and
+    near_dup_clusters_deep (its own chain edges) share the star-contraction
+    output shape; only the recorded pre-checkpoint plans tell them apart.
+    A second build of each, a registry hit for the substrate, hashes the
+    same."""
+    fps = {
+        name: {query_fingerprint(spark, q.QUERIES[name].fn, SF_DIR) for _ in range(2)}
+        for name in ("near_dup_clusters", "near_dup_clusters_deep")
+    }
+    assert all(len(h) == 1 for h in fps.values()), fps
+    assert fps["near_dup_clusters"] != fps["near_dup_clusters_deep"]

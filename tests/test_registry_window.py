@@ -180,11 +180,15 @@ def test_queries_and_oracles_stay_aligned():
 
 def test_queries_md_matches_registry():
     """QUERIES.md is the generated registry index — regenerate it with
-    scripts/gen_queries_md.py when the registry changes."""
-    md = open(os.path.join(_REPO, "QUERIES.md")).read()
-    for name in q.QUERIES:
-        assert f"| `{name}` |" in md, f"QUERIES.md missing {name} — regenerate"
-    listed = md.count("| `")
-    assert listed == len(q.QUERIES), (
-        f"QUERIES.md lists {listed} queries, registry has {len(q.QUERIES)}"
+    scripts/gen_queries_md.py when the registry, ROUND or the window
+    changes. The whole text is compared, so a stale round line or stale
+    `[w]` marks fail as well as a missing query."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "gen_queries_md", os.path.join(_REPO, "scripts", "gen_queries_md.py")
     )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    md = open(os.path.join(_REPO, "QUERIES.md")).read()
+    assert md == gen.render(), "QUERIES.md is stale — run scripts/gen_queries_md.py"

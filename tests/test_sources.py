@@ -154,6 +154,37 @@ def test_frame_cache_nondeterministic_build_cached_on_first_request(spark):
     assert df.is_cached
 
 
+def test_frame_lineage_replayed_on_registry_hit(spark):
+    """A plan a checkpoint hides, registered inside a substrate build, is
+    reported by a later record that only hits the registry; outside any
+    record or build its frame is never built."""
+    from kin_data_pipeline_spark.sources.catalog import (
+        frame_cache_record,
+        frame_cached,
+        frame_lineage,
+    )
+
+    hidden_builds = []
+
+    def hidden():
+        hidden_builds.append(1)
+        return spark.range(3).selectExpr("id * 7 AS x")
+
+    frame_lineage(spark, "__hidden", hidden)
+    assert hidden_builds == []
+
+    def build():
+        frame_lineage(spark, "__hidden", hidden)
+        return spark.range(3)
+
+    frame_cached(spark, "__with_lineage", "k1", build=build)
+    with frame_cache_record(spark) as rec:
+        frame_cached(spark, "__with_lineage", "k1", build=build)
+    assert hidden_builds == [1]
+    assert "__with_lineage" in rec
+    assert [n for n in rec if n.startswith("__hidden ")]
+
+
 def test_frame_cache_clear_unpersists(spark):
     from kin_data_pipeline_spark.sources.catalog import (
         frame_cache_clear,
