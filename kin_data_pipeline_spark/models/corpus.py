@@ -222,8 +222,10 @@ def export_release(catalog, out_dir: str) -> None:
 
 # --- incremental ingest ------------------------------------------------------
 # A release is not rebuilt when new documents arrive: the batch probes the
-# STORED LSH band index (broadcast batch side — the corpus never reshuffles),
-# near-dups of existing content drop, and the novel remainder appends to the
+# STORED LSH band index. The probe streams the stored bands through a join
+# whose build side is the broadcast batch, and deduplicates only the small
+# join output, so the index is scanned once per batch and never shuffled.
+# Near-dups of existing content drop, and the novel remainder appends to the
 # survivor, band, and shard tables in one pass each. Ingesting the same
 # batch twice appends nothing (its bands are in the index after the first
 # ingest), so the operation is idempotent at the content level.
@@ -247,6 +249,18 @@ def corpus_index_model() -> Model:
         depends_on=("corpus_survivors",),
         date_col=None,
         checks=(not_null("doc_id", "band_key"),),
+    )
+
+def _collisions(catalog, batch_bands: DataFrame) -> DataFrame:
+    """Batch doc_ids that share a band with the stored index. The stored
+    bands stream through the join, the batch is its broadcast build side,
+    and only the join output is deduplicated."""
+    return (
+        catalog.table("corpus_bands")
+        .select("band_id", "band_key")
+        .join(F.broadcast(batch_bands), ["band_id", "band_key"])
+        .select("doc_id")
+        .distinct()
     )
 
 def ingest_increment(spark, catalog, batch_docs: DataFrame) -> dict[str, int]:
@@ -283,14 +297,7 @@ def ingest_increment(spark, catalog, batch_docs: DataFrame) -> dict[str, int]:
     batch_bands = document_bands(
         document_signatures(gated.select("doc_id", "text"))
     ).cache()
-    stored = catalog.table("corpus_bands").select("band_id", "band_key").distinct()
-    colliding = (
-        F.broadcast(batch_bands)
-        .join(stored, ["band_id", "band_key"])
-        .select("doc_id")
-        .distinct()
-    )
-    novel = gated.join(colliding, "doc_id", "left_anti").cache()
+    novel = gated.join(_collisions(catalog, batch_bands), "doc_id", "left_anti").cache()
 
     n_arrived = batch_docs.count()
     n_gated = n_arrived - gated.count()

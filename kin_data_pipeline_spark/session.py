@@ -55,6 +55,17 @@ def get_spark(
         # pin their parallelism explicitly instead
         # (operators/dedup.py::_pin_expansion_parallelism).
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+        # The same byte-proportional rule for CACHED plans. Spark defaults
+        # this to false, so AQE never coalesces the shuffle inside a
+        # .cache()/.persist() plan and a cached frame keeps
+        # spark.sql.shuffle.partitions partitions for good (32 when
+        # SPARK_GRAFT_CPUS is unset; thousands on a cluster). Every stage
+        # and append downstream of it then runs that many tasks, however
+        # few its rows: models/corpus.py::ingest_increment caches three
+        # frames, and two 30-doc corpus micro-batches wrote 119 files
+        # (23 with this setting) in perfbench corpus_release on 4 cores,
+        # where the median increment_cpu_s fell from 20.9 to 9.9 CPU-s.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Scan split count follows input BYTES (maxPartitionBytes), not
         # the core count: the Spark default floors split count at
         # defaultParallelism, shredding small inputs into per-core

@@ -33,6 +33,33 @@ def release(spark, sf_dir, tmp_path_factory):
     Runner(spark, cat).run(corpus_release_models(sf_dir), RUN)
     return cat
 
+def _indexed_release(spark, sf_dir, whdir) -> Catalog:
+    """Release DAG plus band index over 90% of the corpus (doc_id % 10 != 0);
+    the held-out 10% is what the ingest tests feed in."""
+    from kin_data_pipeline_spark.models import corpus as C
+    from kin_data_pipeline_spark.plans.model import Model
+    from kin_data_pipeline_spark.sources.catalog import load_table
+
+    cat = Catalog(spark, str(whdir))
+    base = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0)
+    # the quality stage reads the base frame
+    models = C.corpus_release_models(sf_dir)
+    models[0] = Model(
+        name="corpus_quality",
+        builder=lambda ctx: C._quality(ctx, sf_dir).join(
+            base.select("doc_id"), "doc_id", "left_semi"
+        ),
+        date_col=None,
+    )
+    models.append(C.corpus_index_model())
+    Runner(spark, cat).run(models, RUN)
+    return cat
+
+def _held_out(spark, sf_dir):
+    from kin_data_pipeline_spark.sources.catalog import load_table
+
+    return load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
+
 def test_stages_materialize_in_dependency_order(release):
     for t in ("corpus_quality", "corpus_survivors", "corpus_shards"):
         assert release.table(t).count() > 0
@@ -101,26 +128,10 @@ def test_incremental_ingest_appends_only_novel_and_is_idempotent(
     only non-colliding docs append, the index grows with them, and
     re-ingesting the same batch appends nothing."""
     from kin_data_pipeline_spark.models import corpus as C
-    from kin_data_pipeline_spark.plans.model import Model
-    from kin_data_pipeline_spark.sources.catalog import load_table
 
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    base = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 != 0)
-
-    # release DAG over the base corpus (quality stage reads the base frame)
-    models = C.corpus_release_models(sf_dir)
-    models[0] = Model(
-        name="corpus_quality",
-        builder=lambda ctx: C._quality(ctx, sf_dir).join(
-            base.select("doc_id"), "doc_id", "left_semi"
-        ),
-        date_col=None,
-    )
-    models.append(C.corpus_index_model())
-    Runner(spark, cat).run(models, RUN)
-
+    cat = _indexed_release(spark, sf_dir, tmp_path / "wh")
     before = cat.table("corpus_survivors").count()
-    batch = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
+    batch = _held_out(spark, sf_dir)
     stats = C.ingest_increment(spark, cat, batch)
     after = cat.table("corpus_survivors").count()
 
@@ -141,40 +152,17 @@ def test_streaming_ingest_equals_batch_ingest(spark, sf_dir, tmp_path):
     the same survivor set as calling ingest_increment on the union, and a
     restarted stream (same checkpoint) must replay nothing."""
     from kin_data_pipeline_spark.models import corpus as C
-    from kin_data_pipeline_spark.plans.model import Model
-    from kin_data_pipeline_spark.sources.catalog import load_table
     from kin_data_pipeline_spark.streaming.ingest import stream_corpus_increments
 
-    def build_release(whdir):
-        cat = Catalog(spark, str(whdir))
-        base = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 10 != 0
-        )
-        models = C.corpus_release_models(sf_dir)
-        models[0] = Model(
-            name="corpus_quality",
-            builder=lambda ctx: C._quality(ctx, sf_dir).join(
-                base.select("doc_id"), "doc_id", "left_semi"
-            ),
-            date_col=None,
-        )
-        models.append(C.corpus_index_model())
-        Runner(spark, cat).run(models, RUN)
-        return cat
-
-    batch = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 10 == 0)
-        .select("doc_id", "text", "lang", "source", "n_chars")
-    )
+    batch = _held_out(spark, sf_dir).select("doc_id", "text", "lang", "source", "n_chars")
 
     # reference run: one batch ingest
-    cat_ref = build_release(tmp_path / "wh_ref")
+    cat_ref = _indexed_release(spark, sf_dir, tmp_path / "wh_ref")
     C.ingest_increment(spark, cat_ref, batch)
     expect = {r["doc_id"] for r in cat_ref.table("corpus_survivors").collect()}
 
     # streaming run: the same docs arrive as file-source micro-batches
-    cat_s = build_release(tmp_path / "wh_stream")
+    cat_s = _indexed_release(spark, sf_dir, tmp_path / "wh_stream")
     src = tmp_path / "incoming"
     src.mkdir()
     batch.write.parquet(str(src / "b0"))
@@ -198,6 +186,61 @@ def test_streaming_ingest_equals_batch_ingest(spark, sf_dir, tmp_path):
     stats2 = stream_corpus_increments(stream2, cat_s, ckpt)
     assert sum(s["appended"] for s in stats2) == 0
     assert {r["doc_id"] for r in cat_s.table("corpus_survivors").collect()} == expect
+
+
+@pytest.fixture(scope="module")
+def indexed(spark, sf_dir, tmp_path_factory):
+    return _indexed_release(spark, sf_dir, tmp_path_factory.mktemp("wh_indexed"))
+
+
+def test_micro_batch_appends_one_file_per_table(indexed, spark, sf_dir):
+    """A 30-doc micro-batch runs at its own size: AQE coalesces the shuffles
+    inside the ingest's cached frames, so each append writes one file per
+    table, not one per spark.sql.shuffle.partitions slot."""
+    from kin_data_pipeline_spark.models import corpus as C
+
+    batch = _held_out(spark, sf_dir).filter(F.col("doc_id") < 300)
+    stats = C.ingest_increment(spark, indexed, batch)
+    assert stats["arrived"] == 30 and stats["appended"] > 0, stats
+    for t in ("corpus_survivors", "corpus_bands", "corpus_shards"):
+        assert indexed.commit_stats(t)["files"] == 1, t
+
+
+def test_collision_probe_does_not_aggregate_the_stored_index(indexed, spark, sf_dir):
+    """The probe streams the stored band index through a join against the
+    broadcast batch: no Aggregate reads the corpus_bands relation without a
+    join in between, so a micro-batch never shuffles the whole index."""
+    from kin_data_pipeline_spark.models import corpus as C
+    from kin_data_pipeline_spark.queries.llmops import (
+        document_bands,
+        document_signatures,
+    )
+
+    batch_bands = document_bands(
+        document_signatures(_held_out(spark, sf_dir).select("doc_id", "text"))
+    )
+    plan = C._collisions(indexed, batch_bands)._jdf.queryExecution().optimizedPlan()
+    stored = indexed.path("corpus_bands")
+
+    def children(node):
+        seq = node.children()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def nodes(node, through_joins=True):
+        yield node
+        if through_joins or node.nodeName() != "Join":
+            for c in children(node):
+                yield from nodes(c, through_joins)
+
+    def is_stored(node) -> bool:
+        return node.nodeName() == "LogicalRelation" and (
+            stored in node.relation().location().rootPaths().toString()
+        )
+
+    assert any(is_stored(n) for n in nodes(plan)), plan.toString()
+    for agg in (n for n in nodes(plan) if n.nodeName() == "Aggregate"):
+        below = nodes(agg, through_joins=False)
+        assert not any(is_stored(n) for n in below), plan.toString()
 
 
 def test_clean_stage_row_preserving_and_token_accounting(release, spark):

@@ -154,6 +154,20 @@ def test_frame_cache_nondeterministic_build_cached_on_first_request(spark):
     assert df.is_cached
 
 
+def test_cached_aggregate_coalesces_to_its_size(spark):
+    """AQE sizes the shuffle inside a cached plan as it does any other: a
+    cached groupBy over a few rows holds fewer partitions than
+    spark.sql.shuffle.partitions once materialized, so every stage that
+    reads it runs that many tasks."""
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = spark.range(20).groupBy((F.col("id") % 3).alias("k")).count().cache()
+    try:
+        assert df.count() == 3
+        assert df.rdd.getNumPartitions() < n
+    finally:
+        df.unpersist()
+
+
 def test_frame_lineage_replayed_on_registry_hit(spark):
     """A plan a checkpoint hides, registered inside a substrate build, is
     reported by a later record that only hits the registry; outside any
